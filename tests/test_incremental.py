@@ -1,10 +1,13 @@
-"""Incremental mart maintenance: splice-equals-full-recompute and
-partition pruning of the affected-week zone read."""
+"""Incremental mart maintenance: splice-equals-full-recompute, partition
+pruning of the affected-week zone read, SCD-2 history, and an unreadable
+mart failing the tick instead of being overwritten."""
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from uk_housing_dashboard_etl_spark.operators.incremental import (
@@ -114,3 +117,21 @@ def test_scd2_history_runs_and_intervals(spark):
     assert len(out[out.key == 2]) == 1 and bool(out[out.key == 2].iloc[0].is_current)
     u3 = out[out.key == 3].sort_values("version")
     assert list(u3.attr) == ["B", "A"]  # event_id tie-break
+
+
+def test_unreadable_mart_fails_the_tick_and_is_kept(spark, tmp_path):
+    """Only a MISSING mart counts as empty. A mart that exists but cannot
+    be read must fail the tick before the overwrite — treating it as "no
+    mart" would replace its history with the recomputed weeks alone."""
+    zone = str(tmp_path / "zone")
+    mart = tmp_path / "mart"
+    mart.mkdir()
+    corrupt = mart / "part-00000-corrupt.snappy.parquet"
+    corrupt.write_bytes(b"not a parquet file, but the mart's only history")
+    before = corrupt.read_bytes()
+
+    batch = [("a", dt.datetime(2024, 1, 1), 100.0, "Alpha")]
+    with pytest.raises(Exception):
+        daily_increment(spark, _enriched(spark, batch), zone, str(mart))
+    assert sorted(os.listdir(mart)) == [corrupt.name]
+    assert corrupt.read_bytes() == before

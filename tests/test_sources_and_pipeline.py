@@ -82,6 +82,34 @@ def test_full_pipeline_end_to_end(spark, tmp_path):
         assert files, f"missing artifact {name}"
 
 
+def test_artifact_write_failure_fails_the_refresh(spark, tmp_path):
+    """An artifact that cannot be written fails the run: ``run()`` raises
+    and the CLI does not exit 0 with a partial artifact set."""
+    p = tmp_path / "ppd.csv"
+    p.write_text("\n".join(r.format(d=",") for r in PPD_ROWS))
+    blocker = tmp_path / "not_a_dir"
+    blocker.write_text("a regular file")
+    arts = str(blocker / "artifacts")  # a directory under a regular file
+
+    raw = read_csv_sniffed(spark, str(p), require_price_and_date=True)
+    pipe = HousingPipeline(spark, raw, None, PipelineConfig(artifacts_dir=arts))
+    with pytest.raises(Exception):
+        pipe.run()
+
+    from uk_housing_dashboard_etl_spark.__main__ import main
+
+    # the CLI's get_spark reuses this session and resets its shuffle
+    # partitions to the CLI default; later tests read that setting
+    shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        rc = main(["--input", str(p), "--artifacts-dir", arts, "--no-upload"])
+    except Exception:
+        rc = None
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+    assert rc != 0
+
+
 def test_serialize_for_sheet_nulls_and_strings(spark):
     df = spark.createDataFrame([(1, None, 2.5)], "a long, b string, c double")
     out = serialize_for_sheet(df).collect()[0]

@@ -23,9 +23,34 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.stress import OUT, fabricate  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
 from uk_housing_dashboard_etl_spark.session import get_spark  # noqa: E402
+
+OUT = "/tmp/spark_graft_compare"
+
+
+def fabricate(spark, n_rows: int, n_users: int, path: str) -> None:
+    """Deterministic synthetic events: 2 years of data, Zipf-ish user
+    skew (user 0 gets ~100x the traffic via a squared transform)."""
+    df = spark.range(n_rows).select(
+        F.col("id").alias("event_id"),
+        F.timestamp_micros(
+            F.lit(1704067200_000000)  # 2024-01-01
+            + (F.col("id") * 104729) % (730 * 86400 * 1_000_000)
+        ).alias("ts"),
+        (
+            F.pow((F.col("id") * 2654435761 % 1000003) / 1000003.0, 2.0)
+            * n_users
+        ).cast("long").alias("user_id"),
+        F.element_at(
+            F.array(*[F.lit(x) for x in ["click", "view", "purchase", "signup", "error"]]),
+            (F.col("id") % 5 + 1).cast("int"),
+        ).alias("event_type"),
+        ((F.col("id") * 48271 % 99991) / 99991.0 * 490.0 + 0.01).alias("value"),
+        F.lit('{"k": 1}').alias("props"),
+    )
+    df.write.mode("overwrite").parquet(path)
 
 
 def pandas_pipeline(pdf: pd.DataFrame, lookup: dict[int, str]) -> dict[str, float]:
@@ -97,10 +122,9 @@ def main() -> None:
 
         # ONE end-to-end pipeline pass (weekly mart cached by densify,
         # so the fact aggregation runs exactly once — same as pandas).
-        # BEST OF TWO passes per engine, same rule (and reason) as
-        # bench.py: the first pass pays one-time JVM/codegen warmup
-        # that a long-lived deployment amortizes, and single-shot
-        # numbers on this box were measured swinging 3x on ambient VM
+        # BEST OF TWO passes per engine: the first pass pays one-time
+        # JVM/codegen warmup that a long-lived deployment amortizes, and
+        # single-shot numbers were measured swinging 3x on ambient VM
         # noise (56s vs 18s for the SAME pipeline in one session).
         from pyspark.sql import functions as SF
 

@@ -9,8 +9,9 @@ switch with their existing flags:
 
 ``--url`` + ``--cache-file`` enable the reference's download-with-cache
 path (``--force-download`` busts the 24 h TTL); ``--input`` skips the
-network entirely. Exports are best-effort: failures log and continue,
-artifacts always write (ref ``etl_main.py:372-401``).
+network entirely. A failed artifact write fails the run (non-zero exit);
+the optional Sheets/BigQuery uploads stay best-effort like the reference's
+(ref ``etl_main.py:372-401``): their failures log and continue.
 """
 
 from __future__ import annotations

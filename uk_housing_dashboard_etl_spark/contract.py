@@ -254,14 +254,14 @@ def q_latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_qa_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A8/A10: single-row QA record (fused single-scan form — the
-    mart/coverage subtrees re-cleaned the input three times)."""
-    from uk_housing_dashboard_etl_spark.operators.snapshot import (
-        qa_metrics_fused,
+    """A8/A10: single-row QA record, built exactly as the pipeline builds
+    it (raw row count, the weekly mart's LAs and latest week, coverage)."""
+    enriched = _enriched(spark, sf_dir)
+    qa = qa_metrics(
+        load_transactions_raw(spark, sf_dir),
+        weekly_mart(enriched),
+        coverage_report(enriched),
     )
-
-    raw = load_transactions_raw(spark, sf_dir)
-    qa = qa_metrics_fused(raw, _enriched(spark, sf_dir))
     return _round(qa, ["coverage_pct"])
 
 
@@ -6169,10 +6169,13 @@ _EXTENSION_ORACLES["ks_values"] = """
                          / (CAST(na AS DOUBLE) + CAST(nb AS DOUBLE)) AS ne
               FROM agg)
     ), pv AS (
+        -- an absent group leaves the test undefined: p goes NULL with D,
+        -- like the operator's guard (unguarded, NaN clamps to 1.0 here)
         SELECT na, nb, d,
+               CASE WHEN na > 0 AND nb > 0 THEN
                greatest(0.0, least(1.0,
                    2.0 * (exp(-2.0 * lam * lam) - exp(-8.0 * lam * lam)
-                          + exp(-18.0 * lam * lam)))) AS p
+                          + exp(-18.0 * lam * lam)))) END AS p
         FROM lamd
     )
     SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
@@ -11032,7 +11035,14 @@ QUERIES = {
 # oldest remaining r7/r8-era names; the displaced 16 r8-era names
 # queue for r16.
 # # required=37 (new=0), fill=13 (through r8-era), queue=16
+# qa_metrics re-entered as required after q_qa_metrics switched from
+# the fused form to the pipeline's qa_metrics over weekly_mart, and
+# ks_values after its oracle gained the absent-group NULL guard the
+# operator already had; the two newest fill names (epoch_shards, r8;
+# active_suppliers, r7) moved to the head of the queue.
+# # required=39 (new=0), fill=11 (through r7-era), queue=17
 _R15_FRONT: list[str] = [
+    "qa_metrics",
     "multimodal_phash_pairs",
     "cluster_split",
     "dedup_ngram_jaccard",
@@ -11045,6 +11055,7 @@ _R15_FRONT: list[str] = [
     "dedup_minhash_recall",
     "dedup_simhash_complete",
     "incremental_near_gate",
+    "ks_values",
     "similarity_lsh",
     "similarity_ivf",
     "embedding_near_dup",
@@ -11081,10 +11092,10 @@ _R15_FRONT: list[str] = [
     "multimodal_meta",
     "cumulative_users",
     "event_transitions",
-    "active_suppliers",
-    "epoch_shards",
 ]
 _R15_QUEUE: list[str] = [
+    "active_suppliers",
+    "epoch_shards",
     "dsir_scores",
     "importance_resample",
     "ewma_weekly",
@@ -11092,7 +11103,6 @@ _R15_QUEUE: list[str] = [
     "theil_sen_weekly",
     "holt_weekly",
     "name_entities",
-    "qa_metrics",
     "tfidf_top_terms",
     "temperature_mix",
     "transition_probs",

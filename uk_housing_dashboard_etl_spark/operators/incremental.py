@@ -32,6 +32,7 @@ directories under this exact dataflow.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -88,12 +89,19 @@ def daily_increment(
 ) -> DataFrame:
     """One daily tick: zone append → affected-week recompute → mart
     splice → write. Returns the new mart (also persisted at
-    ``mart_path``)."""
+    ``mart_path``).
+
+    Only a missing ``mart_path`` counts as an empty mart (the first
+    tick). Any other read failure — a corrupt footer, a transient I/O
+    error — raises before the overwrite: treating it as "no mart" would
+    replace the whole history with the recomputed weeks alone."""
     weeks = append_increment(enriched_increment, zone_path)
     recomputed = recompute_weeks(spark, zone_path, weeks)
     try:
         old = spark.read.parquet(mart_path)
-    except Exception:
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
         old = None
     new_mart = merge_mart(old, recomputed, weeks).localCheckpoint()
     new_mart.write.mode("overwrite").parquet(mart_path)

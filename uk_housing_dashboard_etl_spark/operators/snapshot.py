@@ -33,33 +33,3 @@ def qa_metrics(tx_raw_count_df: DataFrame, weekly: DataFrame, coverage: DataFram
     )
     cov = coverage.select("coverage_pct")
     return rows_raw.crossJoin(las).crossJoin(cov)
-
-
-def qa_metrics_fused(tx_raw_count_df: DataFrame, enriched: DataFrame) -> DataFrame:
-    """Standalone qa_metrics: identical record to :func:`qa_metrics`,
-    computed in ONE aggregate over the enriched frame instead of three
-    subtrees that each re-clean and re-join the input.
-
-    Value-equivalence to the mart-based form: every (week, LA) group of
-    the weekly mart comes from an enriched row with a non-null LA, so
-    ``count(distinct la)`` and ``max(week)`` over the mart equal the
-    same aggregates over the filtered base — the mart's percentile and
-    count-distinct work buys nothing here. Only ``rows_raw`` needs a
-    second (column-less, metadata-cheap) scan of the raw frame.
-    """
-    week = F.date_trunc("week", F.col("date"))
-    rows_raw = tx_raw_count_df.agg(F.count(F.lit(1)).alias("rows_raw"))
-    stats = enriched.agg(
-        F.countDistinct("local_authority").alias("las"),
-        F.max(
-            F.when(F.col("local_authority").isNotNull(), week)
-        ).alias("latest_week"),
-        (
-            F.lit(100.0)
-            * F.count("local_authority")
-            / F.count(F.lit(1))
-        ).alias("coverage_pct"),
-    )
-    return rows_raw.crossJoin(stats).select(
-        "rows_raw", "las", "latest_week", "coverage_pct"
-    )

@@ -8,13 +8,13 @@ anomalies (W5) → latest snapshot (P10/A7) → QA (A8-A10) → CSV artifacts (S
 Unlike the reference (eager, stage-by-stage full materialization via
 ``df.copy()``), everything here is ONE lazy logical plan with a single
 explicit ``cache()`` on the cleaned+enriched transactions (consumed by
-three marts) — Catalyst pipelines the rest. Exports are best-effort,
-mirroring the reference's swallow-and-log behavior.
+three marts) — Catalyst pipelines the rest. A failed artifact write
+fails the run: a refresh never reports success with a partial artifact
+set.
 """
 
 from __future__ import annotations
 
-import logging
 import os
 from dataclasses import dataclass, field
 
@@ -33,8 +33,6 @@ from uk_housing_dashboard_etl_spark.operators import (
     weekly_mart,
 )
 from uk_housing_dashboard_etl_spark.sources.sinks import write_csv_artifact
-
-logger = logging.getLogger(__name__)
 
 
 @dataclass
@@ -84,8 +82,5 @@ class HousingPipeline:
         }
         if cfg.artifacts_dir:
             for name, df in outputs.items():
-                try:
-                    write_csv_artifact(df, os.path.join(cfg.artifacts_dir, name))
-                except Exception:
-                    logger.exception("artifact write failed: %s", name)
+                write_csv_artifact(df, os.path.join(cfg.artifacts_dir, name))
         return outputs
