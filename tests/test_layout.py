@@ -135,16 +135,12 @@ def test_partitioned_write_prunes_partitions_on_read(spark, tmp_path):
     partition's files are opened."""
     from pyspark.sql import functions as F
 
-    from uk_housing_dashboard_etl_spark.sources.sinks import (
-        write_partitioned_parquet,
-    )
-
     df = spark.range(1000).select(
         F.col("id"),
         (F.col("id") % 4).cast("int").alias("bucket"),
     )
     path = str(tmp_path / "part_events")
-    write_partitioned_parquet(df, path, ["bucket"])
+    df.write.mode("overwrite").partitionBy("bucket").parquet(path)
 
     rd = spark.read.parquet(path).where(F.col("bucket") == 2)
     plan = rd._jdf.queryExecution().executedPlan().toString()

@@ -82,6 +82,89 @@ def test_full_pipeline_end_to_end(spark, tmp_path):
         assert files, f"missing artifact {name}"
 
 
+def _clean_ppd(tmp_path) -> str:
+    """60 well-formed rows: 3 postcodes (2 mapped LAs + 1 unmapped) over
+    10 weeks, integer prices and plain ``YYYY-MM-DD`` dates — the shapes
+    schema inference would type as ``int`` and ``date``."""
+    rows = ["transaction_unique_id,price,date_of_transfer,postcode,property_type"]
+    for i in range(60):
+        day = 1 + (i * 5) % 70  # spread over Jan-Mar 2024
+        date = f"2024-{1 + (day - 1) // 28:02d}-{1 + (day - 1) % 28:02d}"
+        pc = ("AA1 1AA", "BB2 2BB", "CC3 3CC")[i % 3]
+        rows.append(f"t{i},{100000 + 1000 * i},{date},{pc},{'DST'[i % 3]}")
+    p = tmp_path / "ppd_clean.csv"
+    p.write_text("\n".join(rows) + "\n")
+    return str(p)
+
+
+def _normalized_lookup(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from uk_housing_dashboard_etl_spark.functions.cleaning import normalize_code
+
+    lp = tmp_path / "lookup.csv"
+    lp.write_text("postcode,local_authority\nAA1 1AA,Alpha\nBB2 2BB,Beta\n")
+    return read_lookup_csv(spark, str(lp)).select(
+        normalize_code(F.col("postcode")).alias("key"), "local_authority"
+    )
+
+
+def test_csv_read_is_all_strings(spark, tmp_path):
+    """The CSV is read as strings (no inference pass): the cleaning layer
+    owns every coercion, and the weekly mart equals the one built from an
+    inferred-schema read of the same file."""
+    from pyspark.sql.types import StringType
+
+    from uk_housing_dashboard_etl_spark.operators import (
+        enrich_with_lookup,
+        standardize_transactions,
+        weekly_mart,
+    )
+
+    path = _clean_ppd(tmp_path)
+    raw = read_csv_sniffed(spark, path, require_price_and_date=True)
+    assert all(isinstance(f.dataType, StringType) for f in raw.schema.fields)
+
+    lookup = _normalized_lookup(spark, tmp_path)
+    weekly = HousingPipeline(spark, raw, lookup).run()["weekly_by_la"]
+    inferred = spark.read.option("header", True).option("inferSchema", True).csv(path)
+    assert dict(inferred.dtypes)["price"] == "int"
+    want = weekly_mart(enrich_with_lookup(standardize_transactions(inferred), lookup))
+    got_rows, want_rows = weekly.collect(), want.collect()
+    assert len(got_rows) == 20  # 10 weeks x 2 mapped LAs
+    assert got_rows == want_rows
+
+
+def test_refresh_computes_each_mart_once(spark, tmp_path):
+    """After a refresh has written its artifacts, re-reading a mart costs
+    one Spark job: ``qa``, ``windows`` and ``anomalies`` come from their
+    materialized caches, not from the CSV or a second densify → rolling."""
+    import uuid
+
+    sc = spark.sparkContext
+    raw = read_csv_sniffed(spark, _clean_ppd(tmp_path), require_price_and_date=True)
+    arts = str(tmp_path / "artifacts")
+    outputs = HousingPipeline(
+        spark, raw, _normalized_lookup(spark, tmp_path), PipelineConfig(artifacts_dir=arts)
+    ).run()
+
+    def jobs(action) -> int:
+        group = f"mart-once-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def noop(name):
+        return lambda: outputs[name].write.format("noop").mode("overwrite").save()
+
+    assert jobs(outputs["qa"].collect) == 1
+    assert jobs(noop("windows")) == 1
+    assert jobs(noop("anomalies")) == 1
+
+
 def test_artifact_write_failure_fails_the_refresh(spark, tmp_path):
     """An artifact that cannot be written fails the run: ``run()`` raises
     and the CLI does not exit 0 with a partial artifact set."""
@@ -122,35 +205,6 @@ def test_write_csv_artifact_roundtrip(spark, tmp_path):
     write_csv_artifact(df, path)
     back = spark.read.option("header", True).csv(path)
     assert back.count() == 5 and back.columns == ["x"]
-
-
-def test_orc_and_jsonl_roundtrip(spark, sf_small, tmp_path):
-    from uk_housing_dashboard_etl_spark.sources.readers import read_table
-    from uk_housing_dashboard_etl_spark.sources.sinks import (
-        read_orc,
-        write_jsonl,
-        write_orc,
-    )
-
-    ev = read_table(spark, sf_small, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    orc_path = str(tmp_path / "ev_orc")
-    write_orc(ev, orc_path, partition_by=["event_type"])
-    back = read_orc(spark, orc_path)
-    assert back.count() == ev.count()
-    # partitioned layout: per-type filter answered from one directory
-    assert back.where("event_type = 'click'").count() == ev.where(
-        "event_type = 'click'"
-    ).count()
-
-    jl_path = str(tmp_path / "ev_jsonl")
-    write_jsonl(ev, jl_path, compression=None)
-    back_j = spark.read.json(jl_path)
-    assert back_j.count() == ev.count()
-    assert {r["event_id"] for r in back_j.select("event_id").collect()} == {
-        r["event_id"] for r in ev.select("event_id").collect()
-    }
 
 
 def test_write_to_bigquery_plumbing(spark, monkeypatch):

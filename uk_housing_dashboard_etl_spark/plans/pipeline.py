@@ -5,12 +5,20 @@ raw → standardize (P1-P9) → enrich (J1) → weekly mart (W1+A1-A4) +
 type breakdown (A5) + coverage (A9) → densify (J2) → rolling (W2-W4) →
 anomalies (W5) → latest snapshot (P10/A7) → QA (A8-A10) → CSV artifacts (S6).
 
-Unlike the reference (eager, stage-by-stage full materialization via
-``df.copy()``), everything here is ONE lazy logical plan with a single
-explicit ``cache()`` on the cleaned+enriched transactions (consumed by
-three marts) — Catalyst pipelines the rest. A failed artifact write
-fails the run: a refresh never reports success with a partial artifact
-set.
+Like the reference, each mart is computed once; unlike it (eager,
+stage-by-stage ``df.copy()``), the stages are one lazy plan with four
+materialization points, each filled by the first action that reads it:
+
+- ``enriched`` (cleaned + joined transactions), read by the weekly mart,
+  the type breakdown and coverage;
+- the weekly mart, cached inside ``densify_weekly_grid``, read by the grid,
+  its artifact and QA;
+- the anomalies grid (densify → rolling → z-scores), of which ``windows``
+  is a projection and ``latest`` the max-week filter of that projection;
+- ``qa``, filled by its artifact write so the caller's collect reads it.
+
+A failed artifact write fails the run: a refresh never reports success
+with a partial artifact set.
 """
 
 from __future__ import annotations
@@ -32,6 +40,7 @@ from uk_housing_dashboard_etl_spark.operators import (
     type_breakdown,
     weekly_mart,
 )
+from uk_housing_dashboard_etl_spark.operators.rolling import OUTPUT_COLS as ROLLING_COLS
 from uk_housing_dashboard_etl_spark.sources.sinks import write_csv_artifact
 
 
@@ -64,21 +73,19 @@ class HousingPipeline:
     def run(self) -> dict[str, DataFrame]:
         cfg = self.config
         weekly = weekly_mart(self.enriched, approx=cfg.approx_percentiles)
-        breakdown = type_breakdown(self.enriched)
         coverage = coverage_report(self.enriched)
-        dense = densify_weekly_grid(weekly)
-        windows_df = rolling_windows(dense, cfg.windows)
-        anomalies = detect_anomalies(windows_df, cfg.z_thresh)
-        latest = latest_snapshot(windows_df)
-        qa = qa_metrics(self.raw, weekly, coverage)
+        anomalies = detect_anomalies(
+            rolling_windows(densify_weekly_grid(weekly), cfg.windows), cfg.z_thresh
+        ).cache()
+        windows_df = anomalies.select(*ROLLING_COLS)
         outputs = {
             "weekly_by_la": weekly,
-            "type_breakdown": breakdown,
+            "type_breakdown": type_breakdown(self.enriched),
             "coverage": coverage,
             "windows": windows_df,
             "anomalies": anomalies,
-            "latest": latest,
-            "qa": qa,
+            "latest": latest_snapshot(windows_df),
+            "qa": qa_metrics(self.raw, weekly, coverage).cache(),
         }
         if cfg.artifacts_dir:
             for name, df in outputs.items():

@@ -24,6 +24,16 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def default_driver_memory() -> str:
+    """``$SPARK_DRIVER_MEMORY``, else the smaller of 16g and ~3/4 of the
+    host's physical memory: Spark sizes its memory pool from the heap it
+    is given, so a heap the host cannot back invites the OOM killer."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    physical_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    return f"{min(16 * 1024, physical_mb * 3 // 4)}m"
+
+
 def get_spark(
     app_name: str = "uk-housing-dashboard-etl-spark",
     cpus: int | str | None = None,
@@ -48,7 +58,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         # stderr progress bars interleave with harness output (selfcheck/
         # bench pipe through shells) and garble per-query log lines

@@ -8,8 +8,7 @@ The structural difference from the reference: the download lands on
 DISK (streamed in chunks) and Spark scans the file path — the raw text
 is never concatenated into one in-memory string. At real scale this
 driver-side single-stream fetch is the bootstrap path only; a 100 TB
-corpus arrives via object-store copies or parallel ranged GETs, and the
-landing zone is partitioned parquet (`write_partitioned_parquet`).
+corpus arrives via object-store copies or parallel ranged GETs.
 """
 
 from __future__ import annotations

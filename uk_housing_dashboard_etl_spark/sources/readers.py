@@ -89,23 +89,22 @@ def _sniff_separator(path: str) -> str:
 
 
 def read_csv_sniffed(
-    spark: SparkSession,
-    path: str,
-    header: bool = True,
-    schema=None,
-    require_price_and_date: bool = False,
+    spark: SparkSession, path: str, require_price_and_date: bool = False
 ) -> DataFrame:
     """S4: distributed CSV read with driver-side dialect sniffing.
+
+    Every column is read as a string. ``standardize_transactions`` does the
+    lenient coercions (null on failure) itself, so a schema-inference pass
+    would only add a second full scan of the file, and its guesses (an
+    ``int`` price, a ``date`` transfer date) would make parsing depend on
+    the data rather than on the contract.
 
     ``require_price_and_date`` applies the reference's sanity predicate
     (a price-like and a date-like column must exist, ref
     ``etl/etl_main.py:128``) and raises otherwise.
     """
     sep = _sniff_separator(path)
-    reader = spark.read.option("header", header).option("sep", sep)
-    df = reader.schema(schema).csv(path) if schema is not None else reader.option(
-        "inferSchema", True
-    ).csv(path)
+    df = spark.read.option("header", True).option("sep", sep).csv(path)
     if require_price_and_date:
         cols = [c.lower() for c in df.columns]
         if not any("price" in c for c in cols) or not any("date" in c for c in cols):

@@ -6,57 +6,20 @@ tables to ``artifacts/*.csv`` (ref ``etl/etl_main.py:388-401``), serializes
 NaN→"" all-string for Sheets (ref ``etl/etl_main.py:292``), and loads one
 frame to BigQuery (ref ``etl/etl_main.py:304-316``).
 
-Scale notes: marts are small (weeks × LAs), so a single-file CSV via
-``coalesce(1)`` is fine. Raw/fact data at 100 TB would instead go to a
-partitioned parquet zone — ``write_partitioned_parquet`` is that path.
+Scale notes: marts are small (weeks × LAs), so each artifact is written
+as a single CSV file via ``coalesce(1)``.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_csv_artifact(df: DataFrame, path: str, single_file: bool = True) -> None:
-    """S6: header CSV artifact. ``single_file`` coalesces small marts to one
-    partition (driver-friendly artifact); large outputs keep parallelism."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").option("header", True).csv(path)
-
-
-def write_partitioned_parquet(df: DataFrame, path: str, partition_by: list[str]) -> None:
-    """S3-at-scale: raw/derived zone as partitioned parquet (e.g.
-    ``ingest_date=YYYYMMDD``), replacing the reference's timestamped text
-    backups."""
-    df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-
-
-def write_orc(
-    df: DataFrame, path: str, partition_by: list[str] | None = None
-) -> None:
-    """Columnar interchange beyond parquet: ORC (built into Spark, also
-    predicate-pushdown + column-pruning capable) for consumers in the
-    Hive/Presto ecosystem."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
-
-
-def read_orc(spark, path: str) -> DataFrame:
-    return spark.read.orc(path)
-
-
-def write_jsonl(df: DataFrame, path: str, compression: str | None = "gzip") -> None:
-    """Line-delimited JSON export — the lingua franca for corpus handoff
-    to tokenizer/training jobs. One file per partition; gzip by default
-    (splittability doesn't matter for a handoff artifact)."""
-    w = df.write.mode("overwrite")
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)
+def write_csv_artifact(df: DataFrame, path: str) -> None:
+    """S6: header CSV artifact, coalesced to one partition (one file per
+    mart, as the reference's ``artifacts/*.csv``)."""
+    df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
 
 
 def serialize_for_sheet(df: DataFrame) -> DataFrame:
