@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from uk_housing_dashboard_etl_spark.operators.incremental import (
+    append_increment,
     daily_increment,
     recompute_weeks,
 )
@@ -122,16 +123,27 @@ def test_scd2_history_runs_and_intervals(spark):
 def test_unreadable_mart_fails_the_tick_and_is_kept(spark, tmp_path):
     """Only a MISSING mart counts as empty. A mart that exists but cannot
     be read must fail the tick before the overwrite — treating it as "no
-    mart" would replace its history with the recomputed weeks alone."""
+    mart" would replace its history with the recomputed weeks alone. The
+    failed tick must not have appended its day to the zone either."""
     zone = str(tmp_path / "zone")
     mart = tmp_path / "mart"
     mart.mkdir()
     corrupt = mart / "part-00000-corrupt.snappy.parquet"
     corrupt.write_bytes(b"not a parquet file, but the mart's only history")
     before = corrupt.read_bytes()
+    append_increment(_enriched(spark, [("z", dt.datetime(2023, 12, 25), 50.0, "Alpha")]), zone)
 
+    def zone_files():
+        return sorted(
+            os.path.relpath(os.path.join(d, f), zone)
+            for d, _, files in os.walk(zone)
+            for f in files
+        )
+
+    zone_before = zone_files()
     batch = [("a", dt.datetime(2024, 1, 1), 100.0, "Alpha")]
     with pytest.raises(Exception):
         daily_increment(spark, _enriched(spark, batch), zone, str(mart))
     assert sorted(os.listdir(mart)) == [corrupt.name]
     assert corrupt.read_bytes() == before
+    assert zone_files() == zone_before

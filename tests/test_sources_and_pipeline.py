@@ -130,7 +130,7 @@ def test_csv_read_is_all_strings(spark, tmp_path):
     inferred = spark.read.option("header", True).option("inferSchema", True).csv(path)
     assert dict(inferred.dtypes)["price"] == "int"
     want = weekly_mart(enrich_with_lookup(standardize_transactions(inferred), lookup))
-    got_rows, want_rows = weekly.collect(), want.collect()
+    got_rows, want_rows = sorted(weekly.collect()), sorted(want.collect())
     assert len(got_rows) == 20  # 10 weeks x 2 mapped LAs
     assert got_rows == want_rows
 
@@ -163,6 +163,22 @@ def test_refresh_computes_each_mart_once(spark, tmp_path):
     assert jobs(outputs["qa"].collect) == 1
     assert jobs(noop("windows")) == 1
     assert jobs(noop("anomalies")) == 1
+
+
+def test_weekly_artifact_keeps_reference_order(spark, tmp_path):
+    """The mart is unordered, but its ``weekly_by_la`` artifact is written
+    in the reference's O1 order: by local authority, then week."""
+    raw = read_csv_sniffed(spark, _clean_ppd(tmp_path), require_price_and_date=True)
+    arts = str(tmp_path / "artifacts")
+    HousingPipeline(
+        spark, raw, _normalized_lookup(spark, tmp_path), PipelineConfig(artifacts_dir=arts)
+    ).run()
+    (part,) = glob.glob(os.path.join(arts, "weekly_by_la", "part-*.csv"))
+    lines = open(part).read().splitlines()
+    assert lines[0].startswith("week,local_authority,")
+    keys = [tuple(line.split(",")[1::-1]) for line in lines[1:]]
+    assert len(keys) == 20
+    assert keys == sorted(keys)
 
 
 def test_artifact_write_failure_fails_the_refresh(spark, tmp_path):

@@ -11041,6 +11041,12 @@ QUERIES = {
 # operator already had; the two newest fill names (epoch_shards, r8;
 # active_suppliers, r7) moved to the head of the queue.
 # # required=39 (new=0), fill=11 (through r7-era), queue=17
+# weekly_mart dropped its presentation orderBy (the pipeline sorts the
+# weekly_by_la artifact instead), which stales the eight queries that
+# reach it: weekly_by_la, grid_weekly, rolling_windows, anomalies,
+# latest_snapshot, gap_interpolation, range_rolling, week_over_week.
+# The three fill slots left go to the oldest r7-era names.
+# # required=47 (new=0), fill=3 (through r7-era), queue=9
 _R15_FRONT: list[str] = [
     "qa_metrics",
     "multimodal_phash_pairs",
@@ -11056,6 +11062,14 @@ _R15_FRONT: list[str] = [
     "dedup_simhash_complete",
     "incremental_near_gate",
     "ks_values",
+    "weekly_by_la",
+    "rolling_windows",
+    "anomalies",
+    "latest_snapshot",
+    "gap_interpolation",
+    "range_rolling",
+    "grid_weekly",
+    "week_over_week",
     "similarity_lsh",
     "similarity_ivf",
     "embedding_near_dup",
@@ -11084,6 +11098,8 @@ _R15_FRONT: list[str] = [
     "range_join",
     "doc_fingerprint",
     "robust_anomalies",
+]
+_R15_QUEUE: list[str] = [
     "lapsed_parts",
     "repeat_customers",
     "modal_type",
@@ -11092,25 +11108,7 @@ _R15_FRONT: list[str] = [
     "multimodal_meta",
     "cumulative_users",
     "event_transitions",
-]
-_R15_QUEUE: list[str] = [
     "active_suppliers",
-    "epoch_shards",
-    "dsir_scores",
-    "importance_resample",
-    "ewma_weekly",
-    "cusum_weekly",
-    "theil_sen_weekly",
-    "holt_weekly",
-    "name_entities",
-    "tfidf_top_terms",
-    "temperature_mix",
-    "transition_probs",
-    "lm_scores",
-    "bm25_scores",
-    "perplexity_buckets",
-    "heavy_hitters",
-    "key_skew",
 ]
 
 # r14 window kept for the historical record (superseded by _R15_FRONT)

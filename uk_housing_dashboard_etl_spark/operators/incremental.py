@@ -94,15 +94,17 @@ def daily_increment(
     Only a missing ``mart_path`` counts as an empty mart (the first
     tick). Any other read failure — a corrupt footer, a transient I/O
     error — raises before the overwrite: treating it as "no mart" would
-    replace the whole history with the recomputed weeks alone."""
-    weeks = append_increment(enriched_increment, zone_path)
-    recomputed = recompute_weeks(spark, zone_path, weeks)
+    replace the whole history with the recomputed weeks alone. The
+    mart is read before the zone append, so a tick that fails here
+    leaves the zone as it was."""
     try:
         old = spark.read.parquet(mart_path)
     except AnalysisException as exc:
         if exc.getCondition() != "PATH_NOT_FOUND":
             raise
         old = None
+    weeks = append_increment(enriched_increment, zone_path)
+    recomputed = recompute_weeks(spark, zone_path, weeks)
     new_mart = merge_mart(old, recomputed, weeks).localCheckpoint()
     new_mart.write.mode("overwrite").parquet(mart_path)
     return new_mart

@@ -3,8 +3,7 @@
 Reference parity (SURVEY.md §2): P3-P9 cleaning, J1 broadcast enrichment
 join (ref ``etl/etl_main.py:185-188``), W1 Monday-start weekly bucketing
 (ref ``:199``), A1-A4 weekly aggregates (ref ``:212-218``), A5 type
-breakdown (ref ``:221-225``), A9 coverage (ref ``:194-196``), O1 sort
-(ref ``:228``).
+breakdown (ref ``:221-225``), A9 coverage (ref ``:194-196``).
 
 Semantics gotchas preserved (SURVEY.md §4):
 - exact median/percentiles with linear interpolation, never approx;
@@ -118,7 +117,8 @@ def enrich_with_lookup(
 
 
 def weekly_mart(enriched: DataFrame, approx: bool = False) -> DataFrame:
-    """W1 + A1-A4 + O1: the reference's ``weekly_by_la`` mart.
+    """W1 + A1-A4: the reference's ``weekly_by_la`` mart, in no particular
+    row order.
 
     Monday-start tumbling week via ``date_trunc('week')``; per (week, LA):
     count-distinct transactions, mean/median/p10/p90 of price (exact linear
@@ -183,7 +183,6 @@ def weekly_mart(enriched: DataFrame, approx: bool = False) -> DataFrame:
             F.col("__pcts")[0].alias("price_p10"),
             F.col("__pcts")[2].alias("price_p90"),
         )
-        .orderBy("local_authority", "week")
     )
 
 

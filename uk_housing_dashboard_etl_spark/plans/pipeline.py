@@ -17,6 +17,11 @@ materialization points, each filled by the first action that reads it:
   is a projection and ``latest`` the max-week filter of that projection;
 - ``qa``, filled by its artifact write so the caller's collect reads it.
 
+The ``weekly_by_la`` artifact keeps the reference's O1 row order
+(``local_authority``, ``week``; ref ``etl/etl_main.py:228``). The mart
+itself is unordered: the sort runs within the artifact's single
+partition, with no range-partition sample job and no exchange.
+
 A failed artifact write fails the run: a refresh never reports success
 with a partial artifact set.
 """
@@ -88,6 +93,12 @@ class HousingPipeline:
             "qa": qa_metrics(self.raw, weekly, coverage).cache(),
         }
         if cfg.artifacts_dir:
-            for name, df in outputs.items():
+            artifacts = dict(
+                outputs,
+                weekly_by_la=weekly.coalesce(1).sortWithinPartitions(
+                    "local_authority", "week"
+                ),
+            )
+            for name, df in artifacts.items():
                 write_csv_artifact(df, os.path.join(cfg.artifacts_dir, name))
         return outputs

@@ -13,6 +13,14 @@ multi-executor cluster at ~100 TB:
 - Session timezone pinned to UTC so timestamp semantics (``date_trunc`` week
   bucketing) are independent of the host machine and match the DuckDB oracle,
   which treats parquet timestamps as naive.
+- ``spark.sql.codegen.cache.maxEntries`` = 1000, not Spark's 100. The
+  generated-code cache is one LRU per JVM. A refresh generates ~124
+  classes and a tick ~117, so at 100 entries each class is evicted before
+  its next use: every warm refresh would recompile ~113 classes with
+  Janino, and the JIT would compile them again. 1000 holds the refresh,
+  the tick, the dashboard panels and the registry queries of one
+  long-lived JVM; a warm refresh then compiles at most a handful. It is
+  a static conf: ``extra_conf`` overrides it only before the JVM starts.
 """
 
 from __future__ import annotations
@@ -64,6 +72,7 @@ def get_spark(
         # bench pipe through shells) and garble per-query log lines
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # testdata parquet carries TIMESTAMP(NANOS); read as long and let
         # the reader convert to micros (matches DuckDB's truncation)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
