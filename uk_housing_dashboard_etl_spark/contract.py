@@ -16,6 +16,7 @@ differences between Spark and DuckDB. Passthrough doubles are not rounded.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import time
@@ -168,8 +169,58 @@ def _enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     return enrich_with_lookup(tx, load_lookup(spark, sf_dir))
 
 
+# Dashboard marts held per (session, absolute sf_dir): the input version
+# they were built from, and the cached frames by name.
+_MARTS: dict[tuple[SparkSession, str], tuple[tuple, dict[str, DataFrame]]] = {}
+
+
+def _input_version(sf_dir: str) -> tuple:
+    """``(path, size, mtime_ns, inode)`` of every file of the ``*.parquet``
+    tables under ``sf_dir``: stat calls only. A table rewritten in place
+    changes it."""
+    version = []
+    for table in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
+        files = [table]
+        if os.path.isdir(table):
+            files = sorted(
+                os.path.join(d, n) for d, _, names in os.walk(table) for n in names
+            )
+        for path in files:
+            st = os.stat(path)
+            version.append((path, st.st_size, st.st_mtime_ns, st.st_ino))
+    return tuple(version)
+
+
+def _mart(
+    spark: SparkSession, sf_dir: str, name: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """``build()``, cached once per session, absolute ``sf_dir`` and input
+    version, so successive panels read the mart instead of rebuilding it
+    from the star tables.
+
+    A new input version unpersists the marts built over the old files and
+    refreshes every Spark cache entry over the tables: Spark matches a
+    cache by plan and path, not by file contents, and would otherwise
+    serve the old rows. A mart that is held but no longer cached (after
+    ``spark.catalog.clearCache()``) is rebuilt."""
+    root = os.path.abspath(sf_dir)
+    version = _input_version(root)
+    held = _MARTS.get((spark, root))
+    if held is None or held[0] != version:
+        if held is not None:
+            for df in held[1].values():
+                df.unpersist()
+            for table in glob.glob(os.path.join(root, "*.parquet")):
+                spark.catalog.refreshByPath(table)
+        held = _MARTS[(spark, root)] = (version, {})
+    marts = held[1]
+    if name not in marts or not marts[name].storageLevel.useMemory:
+        marts[name] = build().cache()
+    return marts[name]
+
+
 def _weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return weekly_mart(_enriched(spark, sf_dir))
+    return _mart(spark, sf_dir, "weekly", lambda: weekly_mart(_enriched(spark, sf_dir)))
 
 
 def _weekly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -190,7 +241,12 @@ def _weekly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _windows_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return rolling_windows(densify_weekly_grid(_weekly(spark, sf_dir)), WINDOWS)
+    return _mart(
+        spark,
+        sf_dir,
+        "windows",
+        lambda: rolling_windows(densify_weekly_grid(_weekly(spark, sf_dir)), WINDOWS),
+    )
 
 
 # ------------------------------------------------------- spark queries
@@ -250,7 +306,10 @@ def q_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P10/A7: rows of the globally-latest week."""
-    return _round(latest_snapshot(_windows_df(spark, sf_dir)), WINDOW_ROUND)
+    latest = _mart(
+        spark, sf_dir, "latest", lambda: latest_snapshot(_windows_df(spark, sf_dir))
+    )
+    return _round(latest, WINDOW_ROUND)
 
 
 def q_qa_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8228,8 +8287,11 @@ def _cached_fit_large(spark: SparkSession, sf_dir: str, kind: str, builder):
     the same artifact-reuse pattern a production index build ships
     (encode once, every probe job reads the codes table). The path is
     salted with the traced-closure hash of the fitting code
-    (``_fit_code_salt``) so stale artifacts can never outlive a change
-    to ANY code the fit executes; the write is tmp+rename so a crashed
+    (``_fit_code_salt``) and with ``sf_dir``'s input version
+    (``_input_version``), so stale artifacts can never outlive a change
+    to ANY code the fit executes or a rewrite of the tables it reads
+    (superseded artifacts stay on disk until ``clear_large_fit_cache``);
+    the write is tmp+rename so a crashed
     fit never leaves a readable half-artifact, and the tmp dir is
     cleaned in a ``finally`` so a failed builder can't leak it. A lost
     rename race (another process published the same artifact first)
@@ -8243,8 +8305,11 @@ def _cached_fit_large(spark: SparkSession, sf_dir: str, kind: str, builder):
         "spark-warehouse",
         "_fit_cache",
     )
+    root_dir = os.path.abspath(sf_dir)
     digest = hashlib.md5(
-        os.path.abspath(sf_dir).encode() + _fit_code_salt(kind).encode()
+        root_dir.encode()
+        + _fit_code_salt(kind).encode()
+        + repr(_input_version(root_dir)).encode()
     ).hexdigest()[:12]
     path = os.path.join(root, f"{digest}_{kind}")
     if not os.path.isdir(path):

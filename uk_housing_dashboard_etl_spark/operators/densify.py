@@ -25,11 +25,12 @@ def densify_weekly_grid(weekly: DataFrame) -> DataFrame:
     """Left-join the weekly mart onto the dense (week, LA) grid.
 
     The input mart feeds THREE consumers here (bounds aggregate, distinct
-    LAs, join probe side); it is mart-sized (weeks × LAs) by construction,
-    so it is cached to keep the fact-table subtree that produced it from
-    being re-executed per consumer.
+    LAs, join probe side). The caller owns its materialization: pass a
+    cached mart (``HousingPipeline.run`` and the registry's ``_weekly``
+    do), or the fact-table subtree that produced it runs once per
+    consumer. A cache taken here could not be released by anyone and
+    would outlive a rewrite of the files it was read from.
     """
-    weekly = weekly.cache()
     bounds = weekly.agg(
         F.min("week").alias("__wmin"), F.max("week").alias("__wmax")
     )

@@ -11,8 +11,8 @@ materialization points, each filled by the first action that reads it:
 
 - ``enriched`` (cleaned + joined transactions), read by the weekly mart,
   the type breakdown and coverage;
-- the weekly mart, cached inside ``densify_weekly_grid``, read by the grid,
-  its artifact and QA;
+- the weekly mart, cached in ``run``, read three times by the grid (week
+  bounds, LAs, join), by its artifact and by QA;
 - the anomalies grid (densify → rolling → z-scores), of which ``windows``
   is a projection and ``latest`` the max-week filter of that projection;
 - ``qa``, filled by its artifact write so the caller's collect reads it.
@@ -77,7 +77,7 @@ class HousingPipeline:
 
     def run(self) -> dict[str, DataFrame]:
         cfg = self.config
-        weekly = weekly_mart(self.enriched, approx=cfg.approx_percentiles)
+        weekly = weekly_mart(self.enriched, approx=cfg.approx_percentiles).cache()
         coverage = coverage_report(self.enriched)
         anomalies = detect_anomalies(
             rolling_windows(densify_weekly_grid(weekly), cfg.windows), cfg.z_thresh
