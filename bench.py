@@ -225,7 +225,7 @@ def fit_family_totals(
     Mechanically derived, no hand-list to rot: AST-scan contract.py for
     the top-level function enclosing each ``_cached_fit``/
     ``_cached_fit_large`` call (the artifact's builder helper), then a
-    query consumes that kind iff the rotation tracer's closure of its
+    query consumes that kind iff the code-closure tracer's closure of its
     registered function reaches the helper."""
     import ast
 

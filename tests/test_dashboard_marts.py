@@ -98,3 +98,20 @@ def test_cached_fit_large_refits_after_a_table_rewrite(spark, monkeypatch, tmp_p
     assert calls["n"] == 2
     for df in fits:
         shutil.rmtree(os.path.dirname(df.inputFiles()[0]), ignore_errors=True)
+
+
+def test_cached_fit_refits_after_a_table_rewrite(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "events.parquet")
+
+    def builder():
+        return spark.read.parquet(path).agg(F.sum("v").alias("s"))
+
+    def fit() -> int:
+        return contract._cached_fit(spark, str(tmp_path), "sumkind", builder).first()["s"]
+
+    pq.write_table(pa.table({"v": [1, 2, 3]}), path)
+    assert fit() == 6
+    pq.write_table(pa.table({"v": [10, 10, 10]}), path)
+    assert fit() == 30

@@ -1,7 +1,7 @@
 """The traced-closure fit-cache salt (r10, VERDICT r9 item 4).
 
 Replaces r9's byte-pinning tripwire (``test_registry.py``): the salt is
-now derived from the SAME AST closure the rotation engine computes, so
+now derived from the AST code closure ``tools/rotation.py`` traces, so
 an edit to any code a fit transitively executes — including
 cross-module helpers the old module-bytes salt missed (pq_encode →
 similarity's norm expr, kmeans_fit → functions.topk,
@@ -181,7 +181,7 @@ def test_salt_changes_when_a_transitive_dependency_changes(monkeypatch):
     under the module-bytes salt."""
     from tools import rotation
 
-    real_modules = rotation._modules(None)
+    real_modules = rotation._modules()
     dep = (f"{PKG}.functions.rounding", "round4")
     assert dep[1] in real_modules[dep[0]].units
 
@@ -192,11 +192,10 @@ def test_salt_changes_when_a_transitive_dependency_changes(monkeypatch):
             self.units = dict(info.units)
             self.units[unit] = self.units[unit] + "\n# perturbed"
             self.imports = info.imports
-            self.residue = info.residue
 
     perturbed = dict(real_modules)
     perturbed[dep[0]] = _Perturbed(real_modules[dep[0]], dep[1])
-    monkeypatch.setattr(rotation, "_modules", lambda rev=None: perturbed)
+    monkeypatch.setattr(rotation, "_modules", lambda: perturbed)
     monkeypatch.setattr(contract, "_FIT_SALT_MEMO", {})
     after = contract._fit_code_salt("jaccard02_pairs")
     assert after != before, (
@@ -215,7 +214,7 @@ def test_salt_changes_when_a_builder_literal_changes(monkeypatch):
     would have been served to all four exact_substr queries."""
     from tools import rotation
 
-    real_modules = rotation._modules(None)
+    real_modules = rotation._modules()
     dep = (f"{PKG}.contract", "_exsub_spans30")
     assert dep[1] in real_modules[dep[0]].units
 
@@ -229,11 +228,10 @@ def test_salt_changes_when_a_builder_literal_changes(monkeypatch):
             )
             assert self.units[unit] != info.units[unit]
             self.imports = info.imports
-            self.residue = info.residue
 
     perturbed = dict(real_modules)
     perturbed[dep[0]] = _Perturbed(real_modules[dep[0]], dep[1])
-    monkeypatch.setattr(rotation, "_modules", lambda rev=None: perturbed)
+    monkeypatch.setattr(rotation, "_modules", lambda: perturbed)
     monkeypatch.setattr(contract, "_FIT_SALT_MEMO", {})
     after = contract._fit_code_salt("exsub_spans30")
     assert after != before, (

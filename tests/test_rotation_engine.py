@@ -1,7 +1,8 @@
-"""The rotation staleness engine (tools/rotation.py) is load-bearing:
-tests/test_registry.py trusts it to say which queries must re-enter the
-driver window. If the tracer silently broke (empty closures, missed
-imports), that test would pass vacuously — these tests pin the tracer's
+"""The code-closure tracer (tools/rotation.py) is load-bearing:
+``contract._fit_code_salt`` hashes the traced closure of each fit
+kind's roots, so a cached fit is rebuilt when the code behind it
+changes. If the tracer silently broke (empty closures, missed imports),
+the salt would stop moving with the code — these tests pin the tracer's
 actual detection power on both synthetic sources and the live repo."""
 
 from __future__ import annotations
@@ -44,7 +45,7 @@ def test_relative_import_resolution():
 
 
 def test_resolve_follows_reexport_chain():
-    mods = rotation._modules(None)
+    mods = rotation._modules()
     # contract imports qa_metrics from the operators package __init__,
     # which re-exports it from operators.snapshot
     tgt = rotation._resolve(mods, f"{PKG}.operators", "qa_metrics")
@@ -57,7 +58,7 @@ def test_resolve_follows_reexport_chain():
 def test_closure_reaches_function_local_imports():
     """q_mg_heavy_hitters imports its operator INSIDE the function body;
     round-8 found the tracer originally missed exactly this and
-    under-reported staleness."""
+    under-reported the code a query runs."""
     from uk_housing_dashboard_etl_spark import contract
 
     fn = contract.QUERIES["mg_heavy_hitters"]
@@ -78,7 +79,7 @@ def test_closure_reaches_shared_helpers_transitively():
 
 def test_every_registered_query_has_nonempty_closure():
     """An empty closure means the tracer lost the query root — the
-    failure mode that would make the window test vacuous."""
+    failure mode that would leave a fit salt blind to code changes."""
     from uk_housing_dashboard_etl_spark import contract
 
     for name, fn in contract.QUERIES.items():
@@ -88,23 +89,3 @@ def test_every_registered_query_has_nonempty_closure():
         # every contract query reads at least one table or helper
         assert len(cl) >= 2, f"{name}: suspiciously bare closure {cl}"
 
-
-def test_oracle_snapshots_exist_for_every_verified_round():
-    verified = rotation.last_verified()
-    for r in sorted(set(verified.values()) - {0}):
-        assert rotation._snapshot(r), r
-
-
-def test_unchanged_queries_are_not_flagged():
-    """Sanity: the required set must stay a small subset — flagging
-    everything would burn the window; flagging nothing after this
-    round's edits would mean detection is broken."""
-    req = rotation.required_in_window()
-    from uk_housing_dashboard_etl_spark import contract
-
-    assert 0 < len(req) < len(contract.QUERIES) // 2
-    # round-8 ground truth: simjoin.py was rewritten this round, so
-    # simjoin_prefix must be flagged until a CORRECTNESS row covers it
-    verified = rotation.last_verified()
-    if verified["simjoin_prefix"] <= 7:
-        assert "simjoin_prefix" in req

@@ -191,7 +191,8 @@ def test_fit_cache_stores_local_rows(spark):
             [(0, 1, [0.5, 0.5])], "sub int, cell int, centroid array<double>"
         )
 
-    key = ("/tmp/__fitcache_test__", "unit")
+    sf = "/tmp/__fitcache_test__"
+    key = (sf, "unit", contract._input_version(sf))
     contract._FIT_CACHE.pop(key, None)
     a = contract._cached_fit(spark, key[0], key[1], builder)
     b = contract._cached_fit(spark, key[0], key[1], builder)

@@ -1,97 +1,39 @@
-"""Rotation staleness engine: which registry queries MUST re-enter the
-driver-verification window this round.
+"""Static code-closure tracer over the package (pure stdlib ``ast``, no
+execution): which repo units a function reaches, transitively.
 
-The grading driver samples the first ~50 entries of ``contract.QUERIES``
-per round (dict order) and hash-compares them against the DuckDB
-oracles. Two classes of query are REQUIRED to sit inside that window:
+``contract._fit_code_salt`` hashes the traced closure of each on-disk
+fit kind's roots, so a cached fit artifact is rebuilt the moment any
+code it executes changes, and ``bench.fit_family_totals`` uses the same
+closures to attribute fit kinds to the queries that consume them.
+``rows_only_twins`` is registry hygiene: every rows-only query must
+have an oracle-gated twin.
 
-1. **never-verified** — registered but absent from every
-   ``CORRECTNESS_r0N.json``;
-2. **stale** — the query appears in some round's correctness file, but
-   the code it executes (traced function-by-function through the repo's
-   static call graph) changed between that round's close commit and the
-   current working tree. A green row against old code is not a green
-   row against this code.
+How the trace works:
 
-Round 7's verdict flagged exactly this gap: ``qa_metrics``,
-``mg_heavy_hitters``, the BPE whitespace engine, and ``pca_fit`` were
-rewired mid-round without driver re-verification, and the age-keyed
-rotation would not have resurfaced them for several rounds. This module
-makes the re-entry rule mechanical, and
-``tests/test_registry.py::test_rotation_window_covers_new_and_stale``
-enforces it against the committed ``contract.QUERIES`` order.
-
-How the trace works (pure stdlib ``ast`` + git, no execution):
-
-- every repo module is parsed; top-level functions, classes, and
-  constant assignments become *units* keyed ``(module, qualname)`` with
-  a normalized (``ast.unparse``) source — comment/formatting edits do
-  not flag;
+- every package module in the working tree is parsed; top-level
+  functions, classes, and constant assignments become *units* keyed
+  ``(module, qualname)`` with a normalized (``ast.unparse``) source —
+  comment/formatting edits do not change it;
 - imports are resolved through package ``__init__`` re-export chains to
   the defining module;
 - a unit references another unit if its body mentions the imported name
   (any ``Name``/``Attribute`` use, not just calls — functions passed as
   values, e.g. fit thunks, are caught);
-- each query's root is its ``q_*`` function in ``contract.py``; the
-  reachable closure is its implementation surface;
-- "changed since revision R" = unit source differs between ``git show
-  R:path`` and the working tree (new/deleted units count; a change to a
-  non-contract module's top-level non-unit statements flags the whole
-  module — module-level constants can change behavior).
+- a unit's closure is everything reachable from it through those
+  references, including function-local imports.
 
-Conservative by construction: over-flagging costs a window slot,
-under-flagging ships unverified code.
+Conservative by construction: over-reaching costs a rebuilt fit,
+under-reaching would serve a stale one.
 """
 
 from __future__ import annotations
 
 import ast
-import json
-import subprocess
 from functools import lru_cache
 from pathlib import Path
 
 PKG = "uk_housing_dashboard_etl_spark"
 REPO = Path(__file__).resolve().parent.parent
-
-# Close commit of each grading round: the tree the driver's
-# CORRECTNESS_r0N run executed against (the "round N: verdict" commit
-# adds only result files on top of the end-of-round snapshot).
-ROUND_CLOSE: dict[int, str] = {
-    1: "246f86a",
-    2: "24b1617",
-    3: "10b4a7d",
-    4: "f66121a",
-    5: "ef6ed0e",
-    6: "de6e7ea",
-    7: "0ec7ab2",
-    8: "6d01be5",
-    9: "566d239",
-    10: "6859e3e",
-    11: "e1976a6",
-    12: "1a79fac",
-    13: "34c2fa2",
-    14: "c4b35f4",
-}
-
-# ---------------------------------------------------------------- git
-
-
-def _git(*args: str) -> str:
-    return subprocess.run(
-        ["git", *args], cwd=REPO, check=True, capture_output=True, text=True
-    ).stdout
-
-
-def _source_at(path: str, rev: str | None) -> str | None:
-    """File contents at ``rev`` (None = working tree); None if absent."""
-    if rev is None:
-        p = REPO / path
-        return p.read_text() if p.exists() else None
-    try:
-        return _git("show", f"{rev}:{path}")
-    except subprocess.CalledProcessError:
-        return None  # file did not exist at rev
 
 
 # ------------------------------------------------------------- parsing
@@ -112,7 +54,7 @@ def _repo_py_paths() -> list[str]:
 
 
 class _ModuleInfo:
-    """Units, import table, and top-level residue of one module."""
+    """Units and import table of one module."""
 
     def __init__(self, module: str, src: str):
         self.module = module
@@ -120,7 +62,6 @@ class _ModuleInfo:
         self.units: dict[str, str] = {}
         # imported name -> (module, original unit name | None for whole-module)
         self.imports: dict[str, tuple[str, str | None]] = {}
-        residue: list[str] = []
         for node in tree.body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 self.units[node.name] = ast.unparse(node)
@@ -139,19 +80,9 @@ class _ModuleInfo:
                     if isinstance(node, ast.Assign)
                     else [node.target]
                 )
-                names = [t.id for t in targets if isinstance(t, ast.Name)]
-                if names:
-                    for n in names:
-                        self.units[n] = ast.unparse(node)
-                else:
-                    residue.append(ast.unparse(node))
-            elif isinstance(node, ast.Expr) and isinstance(
-                node.value, ast.Constant
-            ):
-                pass  # docstring
-            else:
-                residue.append(ast.unparse(node))
-        self.residue = "\n".join(residue)
+                for t in targets:
+                    if isinstance(t, ast.Name):
+                        self.units[t.id] = ast.unparse(node)
 
     def _resolve_from(self, node: ast.ImportFrom) -> str | None:
         if node.level == 0:
@@ -166,14 +97,11 @@ class _ModuleInfo:
 
 
 @lru_cache(maxsize=None)
-def _modules(rev: str | None = None) -> dict[str, _ModuleInfo]:
+def _modules() -> dict[str, _ModuleInfo]:
     out: dict[str, _ModuleInfo] = {}
     for path in _repo_py_paths():
-        src = _source_at(path, rev)
-        if src is None:
-            continue
         mod = _module_name(path)
-        out[mod] = _ModuleInfo(mod, src)
+        out[mod] = _ModuleInfo(mod, (REPO / path).read_text())
     return out
 
 
@@ -248,7 +176,7 @@ def _unit_refs(
 
 @lru_cache(maxsize=None)
 def _closure(module: str, unit: str) -> frozenset[tuple[str, str]]:
-    mods = _modules(None)
+    mods = _modules()
     seen: set[tuple[str, str]] = set()
     frontier = [(module, unit)]
     while frontier:
@@ -260,41 +188,7 @@ def _closure(module: str, unit: str) -> frozenset[tuple[str, str]]:
     return frozenset(seen)
 
 
-# ------------------------------------------------------------- diffing
-
-
-@lru_cache(maxsize=None)
-def changed_units(rev: str) -> frozenset[tuple[str, str]]:
-    """Units whose normalized source differs between rev and the tree."""
-    changed_paths = [
-        p
-        for p in _git("diff", "--name-only", rev, "--", PKG).splitlines()
-        if p.endswith(".py")
-    ]
-    now, then = _modules(None), _modules(rev)
-    out: set[tuple[str, str]] = set()
-    for path in changed_paths:
-        mod = _module_name(path)
-        a, b = then.get(mod), now.get(mod)
-        if a is None or b is None:  # added or deleted module
-            src = b or a
-            if src:
-                out.update((mod, u) for u in src.units)
-            continue
-        for u in set(a.units) | set(b.units):
-            if a.units.get(u) != b.units.get(u):
-                out.add((mod, u))
-        # contract.py's top level is the registry/rotation scaffolding
-        # and churns every round by design; everywhere else, top-level
-        # residue (loose statements) can change behavior module-wide.
-        if not mod.endswith(".contract") and a.residue != b.residue:
-            out.update((mod, u) for u in b.units)
-    return frozenset(out)
-
-
-# ------------------------------------------------------------- queries
-
-WINDOW = 50  # the driver samples this many registry entries per round
+# ------------------------------------------------------------- registry
 
 # rows-only drains whose twin suffix is not the default "_check"
 _TWIN_OVERRIDES = {
@@ -313,10 +207,9 @@ _TWIN_OVERRIDES = {
 def rows_only_twins() -> dict[str, str]:
     """rows-only query -> its oracle-gated twin (r13 verdict item 5).
 
-    Every ``no_oracle`` drain is graded rows-only, so its evidence of
-    correctness is the hash-exact twin. When the drain enters the
-    driver window, the twin must enter too — a rows-only green next to
-    an unverified twin vouches for nothing.
+    Every ``no_oracle`` drain is checked rows-only, so its evidence of
+    correctness is the hash-exact twin; a drain without one vouches for
+    nothing.
     """
     from uk_housing_dashboard_etl_spark import contract
 
@@ -333,168 +226,3 @@ def rows_only_twins() -> dict[str, str]:
         out[name] = twin
     return out
 
-
-def last_verified() -> dict[str, int]:
-    """query -> latest round with a GREEN CORRECTNESS row (0 = never).
-
-    Green means the driver actually vouched for the result: err is null
-    with rows/schema/hash all matching, or the documented by-design
-    ``no_oracle`` rows-only case. A row with a hard driver error (e.g.
-    sessionize in r01) or ``hash_match: false`` (ks_values in r04) is
-    NOT a verification — counting it would let a query that FAILED the
-    driver check drop out of the window forever (round-8 advice)."""
-    from uk_housing_dashboard_etl_spark import contract
-
-    out = {name: 0 for name in contract.QUERIES}
-    for r in sorted(ROUND_CLOSE):
-        f = REPO / f"CORRECTNESS_r{r:02d}.json"
-        if not f.exists():
-            continue
-        for name, row in json.loads(f.read_text()).items():
-            if name not in out:
-                continue
-            green = row.get("err") == "no_oracle" or (
-                row.get("err") is None
-                and row.get("rows_match") is True
-                and row.get("schema_match") is True
-                and row.get("hash_match") is True
-            )
-            if green:
-                out[name] = r
-    return out
-
-
-@lru_cache(maxsize=None)
-def _snapshot(round_no: int) -> dict:
-    """Committed {oracles, roots} dump of that round's close commit
-    (generated once by tools/snapshot_rounds.py — revs are immutable)."""
-    f = REPO / "tools" / "rotation_snapshots" / f"r{round_no:02d}.json"
-    if not f.exists():
-        raise FileNotFoundError(
-            f"missing rotation snapshot for round {round_no}: add the "
-            "round-close commit to ROUND_CLOSE and run "
-            "tools/snapshot_rounds.py"
-        )
-    return json.loads(f.read_text())
-
-
-def required_in_window() -> dict[str, str]:
-    """query -> reason ('new' | 'stale:<module.unit>,…' | 'oracle' |
-    'rebound') for every query that must be driver-verified this round.
-
-    A query is required if it has never been driver-checked, OR if any
-    of the following changed since the round-close commit of its last
-    green CORRECTNESS row: (a) any repo unit in its q-function's static
-    call closure, (b) its oracle SQL text, (c) the function it is
-    registered to.
-    """
-    from uk_housing_dashboard_etl_spark import contract
-
-    mods = _modules(None)
-    verified = last_verified()
-    out: dict[str, str] = {}
-    for name, fn in contract.QUERIES.items():
-        lv = verified[name]
-        if lv == 0:
-            out[name] = "new"
-            continue
-        snap = _snapshot(lv)
-        root_mod = fn.__module__
-        root_unit = fn.__qualname__.split(".")[0]
-        if root_mod not in mods or root_unit not in mods[root_mod].units:
-            out[name] = "new"  # untraceable root: treat as unverified
-            continue
-        if snap["roots"].get(name) != fn.__qualname__:
-            out[name] = "rebound"
-            continue
-        if snap["oracles"].get(name) != contract.ORACLES.get(name):
-            out[name] = "oracle"
-            continue
-        touched = _closure(root_mod, root_unit) & changed_units(
-            ROUND_CLOSE[lv]
-        )
-        if touched:
-            out[name] = "stale:" + ",".join(
-                sorted(f"{m.split('.')[-1]}.{u}" for m, u in touched)[:4]
-            )
-    # rows-only drains are vouched for by their hash-exact twins: when
-    # the drain is (re)verified, the twin's green must be equally fresh
-    # (r13 verdict item 5 — streaming_anomaly rode the r13 window
-    # rows-only while its twin's last green sat outside it)
-    for drain, twin in rows_only_twins().items():
-        if drain in out and twin not in out:
-            out[twin] = f"twin:{drain}"
-    return out
-
-
-def emit_front(window: int = WINDOW) -> None:
-    """Print a paste-ready front/queue pair for contract.py: new first,
-    then stale (oldest-verified first), then the oldest-round fill to
-    the window edge; displaced oldest names become the queue. Run at
-    each round start AFTER adding the new ROUND_CLOSE entry and
-    snapshot."""
-    from uk_housing_dashboard_etl_spark import contract
-
-    req = required_in_window()
-    verified = last_verified()
-    order = list(contract.QUERIES)
-    pos = {n: i for i, n in enumerate(order)}
-    new = [n for n, why in req.items() if why == "new"]
-    stale = sorted(
-        (n for n in req if n not in new),
-        key=lambda n: (verified[n], pos[n]),
-    )
-    # fill from the FULL oldest-first ordering, not a single era — an
-    # era smaller than the remaining slots must not under-fill the
-    # window (round-8 advice); the queue is the rest of whichever era
-    # the fill cut mid-way (the names displaced past the window edge).
-    fill_pool = sorted(
-        (n for n in order if n not in req),
-        key=lambda n: (verified[n], pos[n]),
-    )
-    n_fill = max(0, window - len(new) - len(stale))
-    fill = fill_pool[:n_fill]
-    edge = verified[fill[-1]] if fill else 0
-    queue = [n for n in fill_pool[n_fill:] if verified[n] <= edge]
-    print(f"# required={len(req)} (new={len(new)}), "
-          f"fill={len(fill)} (through r{edge}-era), queue={len(queue)}")
-    print("_R_FRONT = [")
-    for n in new + stale + fill:
-        print(f'    "{n}",')
-    print("]\n_R_QUEUE = [")
-    for n in queue:
-        print(f'    "{n}",')
-    print("]")
-
-
-def projected_window() -> tuple[int, int, int]:
-    """(required, era_fill, window) — the budget arithmetic, done by
-    the tool on every run instead of by hand mid-round (r13 verdict
-    item 6: both r12 and r13 planned slots by hand and arrived at a
-    packed window only by luck)."""
-    req = required_in_window()
-    fill = max(0, WINDOW - len(req))
-    return len(req), fill, WINDOW
-
-
-def main() -> None:
-    if len(__import__("sys").argv) > 1 and __import__("sys").argv[1] == "--plan":
-        emit_front()
-        return
-    verified = last_verified()
-    req = required_in_window()
-    print(f"{len(req)} queries required in window:")
-    for name, why in sorted(req.items(), key=lambda kv: (kv[1], kv[0])):
-        print(f"  r{verified[name]}  {name:40s} {why}")
-    eras: dict[int, int] = {}
-    for r in verified.values():
-        eras[r] = eras.get(r, 0) + 1
-    print("era counts:", dict(sorted(eras.items())))
-    n_req, n_fill, window = projected_window()
-    status = "OK" if n_req <= window else "OVER BUDGET"
-    print(f"window budget: required={n_req} + era-fill={n_fill} "
-          f"of {window} hard slots [{status}]")
-
-
-if __name__ == "__main__":
-    main()

@@ -223,23 +223,6 @@ def _weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _mart(spark, sf_dir, "weekly", lambda: weekly_mart(_enriched(spark, sf_dir)))
 
 
-def _weekly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(week, local_authority, transactions) only — value-identical to
-    ``_weekly``'s projection (the mart is ``stats ⋈ counts`` over the
-    same group keys, so the counts aggregate alone yields the same
-    rows) but skips the percentile aggregate, the mart join and the
-    presentation sort. The time-series family (ewma/holt/cusum/
-    theil-sen/robust-anomaly) consumes ONLY the count series, so
-    rebuilding the full mart per query was pure waste under the
-    clean-room bench."""
-    base = _enriched(spark, sf_dir).where(
-        F.col("local_authority").isNotNull()
-    ).withColumn("week", F.date_trunc("week", F.col("date")))
-    return base.groupBy("week", "local_authority").agg(
-        F.countDistinct("transaction_id").alias("transactions")
-    )
-
-
 def _windows_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _mart(
         spark,
@@ -2130,7 +2113,9 @@ def q_robust_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     resistant companion to the reference's mean/stddev z-score)."""
     from uk_housing_dashboard_etl_spark.operators.anomaly import robust_anomalies
 
-    return robust_anomalies(_weekly_counts(spark, sf_dir))
+    return robust_anomalies(
+        _weekly(spark, sf_dir).select("week", "local_authority", "transactions")
+    )
 
 
 def q_top_parts_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6025,7 +6010,9 @@ def q_ewma_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle matches bit-for-bit with no rounding."""
     from uk_housing_dashboard_etl_spark.operators.timeseries import ewma_smooth
 
-    return ewma_smooth(_weekly_counts(spark, sf_dir))
+    return ewma_smooth(
+        _weekly(spark, sf_dir).select("week", "local_authority", "transactions")
+    )
 
 
 _EXTENSION_ORACLES["ewma_weekly"] = _BASE.replace(
@@ -6542,7 +6529,10 @@ def q_cusum_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
         cusum_changepoints,
     )
 
-    return cusum_changepoints(_weekly_counts(spark, sf_dir), threshold=5.0)
+    return cusum_changepoints(
+        _weekly(spark, sf_dir).select("week", "local_authority", "transactions"),
+        threshold=5.0,
+    )
 
 
 _EXTENSION_ORACLES["cusum_weekly"] = _BASE.replace(
@@ -6672,7 +6662,9 @@ def q_theil_sen_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`value_trend`) is not."""
     from uk_housing_dashboard_etl_spark.operators.stats import theil_sen_slope
 
-    return theil_sen_slope(_weekly_counts(spark, sf_dir))
+    return theil_sen_slope(
+        _weekly(spark, sf_dir).select("week", "local_authority", "transactions")
+    )
 
 
 _EXTENSION_ORACLES["theil_sen_weekly"] = _BASE + """
@@ -6699,7 +6691,9 @@ def q_holt_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     coupled two-state recursive fold vs a recursive-CTE oracle."""
     from uk_housing_dashboard_etl_spark.operators.timeseries import holt_linear
 
-    return holt_linear(_weekly_counts(spark, sf_dir))
+    return holt_linear(
+        _weekly(spark, sf_dir).select("week", "local_authority", "transactions")
+    )
 
 
 _EXTENSION_ORACLES["holt_weekly"] = _BASE.replace(
@@ -8143,9 +8137,11 @@ _EXTENSION_ORACLES["streaming_joined_outer"] = """
 # the whole process lifetime (round-5 advice — cross-application
 # entries were never evicted) and would break under the bench harness's
 # between-query cache release. Rebuilding via ``createDataFrame`` from
-# a few hundred local rows is negligible next to the fit it avoids, is
-# valid across sessions (the rows are plain data), and the dict is
-# bounded by |sf_dirs| × |fit kinds|.
+# a few hundred local rows is negligible next to the fit it avoids, and
+# is valid across sessions (the rows are plain data). Entries are keyed
+# by ``sf_dir``'s input version too, so a table rewritten in place is
+# refitted instead of served the old fit; the dict is bounded by
+# |sf_dirs| × |fit kinds| × |input versions seen|.
 _FIT_CACHE: dict[tuple, tuple] = {}
 
 # wall-clock seconds each fit kind cost when it actually ran (cache
@@ -8156,24 +8152,24 @@ FIT_TIMES: dict[tuple, float] = {}
 
 
 def _cached_fit(spark: SparkSession, sf_dir: str, kind: str, builder):
-    key = (sf_dir, kind)
+    key = (sf_dir, kind, _input_version(os.path.abspath(sf_dir)))
     if key not in _FIT_CACHE:
         t0 = time.time()
         fitted = builder()
         _FIT_CACHE[key] = (fitted.schema, fitted.collect())
-        FIT_TIMES[key] = round(time.time() - t0, 3)
+        FIT_TIMES[(sf_dir, kind)] = round(time.time() - t0, 3)
     schema, rows = _FIT_CACHE[key]
     return spark.createDataFrame(rows, schema)
 
 
 # On-disk artifact kind -> the root units (module suffix, function)
 # whose TRACED static call closure defines the artifact's validity.
-# tools/rotation.py's AST engine — the same tracer that stales queries
-# — closes over everything a root calls transitively, so cross-module
-# helpers (pq_encode → similarity's norm expr, kmeans_fit →
-# functions.topk, ngram_jaccard_pairs → functions.rounding) are covered
-# automatically: the r8/r9 module-bytes salt's blind spot, which needed
-# a byte-pinning tripwire meanwhile.
+# tools/rotation.py's AST code-closure tracer closes over everything a
+# root calls transitively, so cross-module helpers (pq_encode →
+# similarity's norm expr, kmeans_fit → functions.topk,
+# ngram_jaccard_pairs → functions.rounding) are covered automatically:
+# the r8/r9 module-bytes salt's blind spot, which needed a byte-pinning
+# tripwire meanwhile.
 #
 # Roots are the CONTRACT-SIDE BUILDER HELPERS that enclose each
 # ``_cached_fit_large`` call site (every one, for kinds built from more
@@ -8258,7 +8254,7 @@ def _fit_code_salt(kind: str) -> str:
             with open(p, "rb") as fh:
                 h.update(fh.read())
         return h.hexdigest()[:8]
-    mods = rotation._modules(None)
+    mods = rotation._modules()
     closure: set[tuple[str, str]] = set()
     for mod_suffix, unit in roots:
         full = f"{pkg}.{mod_suffix}"
@@ -8785,16 +8781,9 @@ for _r5q in (
     ORACLES[_r5q] = _rewrite_round4(_EXTENSION_ORACLES[_r5q])
 
 
-# Registry order matters: the driver's correctness harness checks queries in
-# dict order and samples ~50 per round. Round 1 verified the first 50 of the
-# round-1 ordering (§2 core + relational); round 2 verified the first 50 of
-# the round-2 ordering (similarity/text/curation/behavior + the recall
-# gates through similarity_ivf_recall). Round 3 front-loads the 20 entries
-# NEITHER window ever covered (the streaming family, the *_check/*_recall
-# oracle gates, tfidf/ngram/pack/temperature etc.), then the two r2 ERR rows
-# (multimodal_decode/features, now digest-projected), then re-confirms the
-# §2 core greens from r1. Families verified green in r2 sit at the tail;
-# round 4 should rotate them back into the window.
+# The registry: query name -> builder. Later sections add their queries
+# with ``QUERIES[name] = ...``; nothing reorders it, and no caller relies
+# on its order.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "streaming_cdc": q_streaming_cdc,
     "sketch_cms_check": q_sketch_cms_check,
@@ -8893,7 +8882,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "top_supplier": q_top_supplier,
     "nation_pair_trade": q_nation_pair_trade,
     "market_share": q_market_share,
-    # ---------------- below the ~50-query driver window ----------------
     "product_profit": q_product_profit,
     "late_shipments": q_late_shipments,
     "order_count_distribution": q_order_count_distribution,
@@ -9017,182 +9005,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "communities": q_communities,
     "weighted_sample": q_weighted_sample,
     "streaming_enriched": q_streaming_enriched,
-}
-
-# Round-4 window rotation (VERDICT r3 items 1 and 7). The driver checks
-# the first ~50 registry entries each round, so the front is re-ordered
-# every round to guarantee no family goes two consecutive rounds without
-# a driver verification. Round 4 front-loads: the 23 round-3b additions
-# no window has ever checked, the new round-4 queries, a sample of every
-# r2-verified family (similarity / text / curation / behavior — unseen
-# since round 2), the §2 reference core, and the aging r1-era TPC-H
-# shapes. Everything else keeps its round-3 relative order at the tail.
-_R4_FRONT = [
-    # --- slots 1-23: round-3b additions, never driver-checked ---
-    "cohort_matrix",
-    "funnel_timing",
-    "value_trend",
-    "pmi_pairs",
-    "semantic_decontaminate",
-    "psi_drift",
-    "attribution_credit",
-    "embedding_health",
-    "bpe_merges",
-    "split_leakage",
-    "table_profile",
-    "twap",
-    "join_cardinality",
-    "streaming_rate_cap",
-    "streaming_anomaly",
-    "rrf_fusion",
-    "quality_calibrate",
-    "vocab_growth",
-    "trimmed_stats",
-    "fuzzy_matches",
-    "fuzzy_pair_stats",
-    "fuzzy_snm_recall",
-    "ewma_weekly",
-    # --- new in round 4 ---
-    "fuzzy_pair_stats_bucketed",
-    "rare_token_linkage",
-    "cusum_weekly",
-    "interarrival_stats",
-    "benford_prices",
-    "dedup_containment",
-    "strip_boilerplate",
-    "theil_sen_weekly",
-    "holt_weekly",
-    "basket_lift",
-    "streaming_distinct_check",
-    "sql_weekly_by_la",
-    "cdc_chunk_dedup",
-    "embedding_covariance",
-    "asof_forward",
-    "hard_negatives",
-    "name_entities",
-    "top_paths",
-    "ks_values",
-    "ab_ztest",
-    "multimodal_phash",
-    "multimodal_phash_pairs",
-    # --- §2 reference-core re-confirmation ---
-    "clean_transactions",
-    "weekly_by_la",
-    "rolling_windows",
-    "anomalies",
-    "latest_snapshot",
-    # --- aging r1-era TPC-H shapes (verified r1 only) ---
-    "top_parts_per_nation",
-    "shipping_priority",
-    "market_share",
-    # --- r2-family rotation (green in r2, unseen since) ---
-    "similarity_topk",
-    "similarity_lsh_recall",
-    "similarity_ivf_recall",
-    "embedding_near_dup_lsh",
-    "text_stats",
-    "quality_score",
-    "curate_corpus",
-    "sessionize",
-    # --- window-tail fill: more r2 greens ---
-    "dedup_minhash",
-    "doc_fingerprint",
-]
-# Round-5 window rotation (same discipline, next slice). Front-loads:
-# the seven round-4b additions that landed after the r4 window froze
-# (never driver-checked), the three r4 hash-mismatch rows re-verified
-# after their type-level fixes (DECIMAL-literal rounding in the pure-SQL
-# flagship; HUGEINT-vs-BIGINT casts in the ks/ab oracles), every query
-# added in round 5 (_R5_NEW, grown as operators land), then the r1-era
-# set whose last driver verification was round 1 — TPC-H relational
-# shapes, the dedup/sketch families, and the §2 satellites. The r2-era
-# block rotates in round 6.
-_R5_NEW: list[str] = [
-    "streaming_cdc",
-    "sketch_cms_check",
-    "streaming_joined_agg",
-    "seasonality_profile",
-    "weekly_churn",
-    "cluster_split",
-    "similarity_ivfpq",
-    "similarity_ivfpq_recall",
-    "streaming_joined_outer",
-    "similarity_pq",
-    "similarity_pq_recall",
-    "streaming_joined",
-    "mannwhitney_values",
-    "chi2_type_split",
-    "pareto_parts",
-    "peak_sessions",
-    "cdc_replay",
-]
-_R5_FRONT = (
-    [
-        # --- never driver-checked (landed after the r4 window froze) ---
-        "simjoin_prefix",
-        "copurchase_triangles",
-        "pagerank_trade",
-        "degree_profile",
-        "communities",
-        "weighted_sample",
-        "streaming_enriched",
-        # --- r4 hash-mismatch rows, re-verified after type fixes ---
-        "sql_weekly_by_la",
-        "ks_values",
-        "ab_ztest",
-    ]
-    + _R5_NEW
-    + [
-        # --- last verified in round 1: TPC-H relational set ---
-        "rollup_lineitem",
-        "pricing_summary",
-        "shipping_priority",
-        "revenue_by_nation",
-        "top_customers",
-        "order_priority",
-        "customers_without_orders",
-        "brand_revenue",
-        "promo_revenue",
-        "large_orders",
-        "idle_capital",
-        "top_supplier",
-        "nation_pair_trade",
-        "market_share",
-        "product_profit",
-        "late_shipments",
-        "order_count_distribution",
-        "supplier_variety",
-        "small_qty_revenue",
-        "disjunctive_revenue",
-        "slow_suppliers",
-        "important_parts",
-        "min_cost_supplier",
-        # --- last verified in round 1: dedup / sketch / §2 satellites ---
-        "asof_join",
-        "dedup_exact",
-        "dedup_ngram_jaccard",
-        "dedup_clusters",
-        "top_ngrams",
-        "dedup_minhash",
-        "dedup_simhash",
-        "sketch_cardinalities",
-        "sketch_weekly_distinct",
-        "sketch_quantiles",
-        "type_breakdown",
-        "coverage_report",
-        "grid_weekly",
-        "qa_metrics",
-        "week_over_week",
-        "props_json",
-        "quality_checks",
-        "latest_by_key",
-        "revenue_filter",
-        "weekly_type_pivot",
-    ]
-)
-QUERIES = {
-    name: QUERIES[name]
-    for name in _R5_FRONT + [q for q in QUERIES if q not in _R5_FRONT]
 }
 
 # ---------------------------------------------------------------------------
@@ -10088,111 +9900,6 @@ ORACLES["sketch_intersection_check"] = """
 QUERIES["sketch_intersection_check"] = q_sketch_intersection_check
 
 
-# Round-6 window rotation (README "r6 (planned)" row, VERDICT r5 item
-# 3): the round-6 additions first, then the twenty r1-era entries the
-# r5 TPC-H fill displaced past the window edge (dedup/sketch families +
-# §2 satellites — last driver-verified in round 1), then the r2-era
-# similarity/text/curation/behavior block (last driver-verified in
-# round 2; the ~13 names that overflow this round's ~50-slot window
-# lead the r7 rotation). r2-era names re-verified in the r4/r5 windows
-# (similarity_topk, the lsh/ivf recall gates, text_stats, quality_score,
-# curate_corpus, sessionize, embedding_near_dup_lsh) are NOT repeated.
-_R6_NEW: list[str] = [
-    "similarity_ivfpq_res",
-    "similarity_ivfpq_res_recall",
-    "khop_distances",
-    "bloom_join_prune",
-    "pca_scores",
-    "pca_check",
-    "mg_heavy_hitters",
-    "link_prediction",
-    "acf_weekly",
-    "band_join",
-    "streaming_mg_topk",
-    "matryoshka_recall",
-    "bpe_encode",
-    "bpe_encode_check",
-    "salted_join_stats",
-    "sketch_intersection_check",
-    "embedding_quantile_norm",
-    "winsorized_prices",
-    "expectations",
-]
-_R6_FRONT = (
-    _R6_NEW
-    + [
-        # --- last verified in round 1: dedup / sketch / §2 satellites ---
-        "asof_join",
-        "dedup_exact",
-        "dedup_ngram_jaccard",
-        "dedup_clusters",
-        "top_ngrams",
-        "dedup_minhash",
-        "dedup_simhash",
-        "sketch_cardinalities",
-        "sketch_weekly_distinct",
-        "sketch_quantiles",
-        "type_breakdown",
-        "coverage_report",
-        "grid_weekly",
-        "qa_metrics",
-        "week_over_week",
-        "props_json",
-        "quality_checks",
-        "latest_by_key",
-        "revenue_filter",
-        "weekly_type_pivot",
-        # --- last verified in round 2: similarity / text / curation ---
-        "similarity_lsh",
-        "similarity_ivf",
-        "embedding_near_dup",
-        "lang_id",
-        "redact_pii",
-        "hash_sample",
-        "dataset_split",
-        "stratified_sample",
-        "corpus_cube",
-        "decontaminate",
-        "repetition_stats",
-        "filter_funnel",
-        "embedding_quantize",
-        "token_histogram",
-        "robust_anomalies",
-        "price_deciles",
-        "lapsed_parts",
-        "source_cap",
-        "weekly_unpivot",
-        "repeat_customers",
-        "supplier_percentile",
-        "gap_interpolation",
-        "modal_type",
-        "knn_classify",
-        "embedding_centroids",
-        "conversion_funnel",
-        "weekly_retention",
-        "multimodal_meta",
-        # --- window overflow: r2-era names queued for the r7 window ---
-        "multimodal_decode",
-        "multimodal_features",
-        "multimodal_frames",
-        "cumulative_users",
-        "event_transitions",
-        "first_last_touch",
-        "corr_stats",
-        "price_histogram",
-        "grouping_sets",
-        "range_rolling",
-        "active_suppliers",
-        "range_join",
-        "doc_fingerprint",
-    ]
-)
-QUERIES = {
-    name: QUERIES[name]
-    for name in _R6_FRONT + [q for q in QUERIES if q not in _R6_FRONT]
-}
-
-
 # ------------------------------------------------- round-7 additions
 
 
@@ -10488,353 +10195,6 @@ ORACLES["epoch_shards"] = """
 """
 
 
-# Round-7 window rotation (README "r7 (planned)" row, VERDICT r6 item
-# 1): the three round-7 additions first, then EVERY query whose last
-# driver check is round 2 (the r4 "tail sample" the README planned
-# never ran — the driver window cut at exactly 50 slots — so the true
-# r2-era debt is 37 names, not 13), then the oldest r3-era block
-# (multimodal + batch-streaming families) up to the ~50-slot window
-# edge. The ~35 remaining r3-era names queue immediately after and
-# lead the r8 rotation.
-_R7_NEW: list[str] = [
-    "dedup_exact_substr",
-    "dedup_exact_substr_spans",
-    "dedup_exact_substr_trim",
-    "dedup_exact_substr_agree",
-]
-_R7_FRONT = (
-    _R7_NEW
-    + [
-        # --- last driver-verified in round 2 ---
-        "sessionize",
-        "range_join",
-        "similarity_topk",
-        "embedding_near_dup_lsh",
-        "text_stats",
-        "quality_score",
-        "doc_fingerprint",
-        "filter_funnel",
-        "embedding_quantize",
-        "token_histogram",
-        "robust_anomalies",
-        "price_deciles",
-        "lapsed_parts",
-        "source_cap",
-        "weekly_unpivot",
-        "repeat_customers",
-        "supplier_percentile",
-        "gap_interpolation",
-        "top_parts_per_nation",
-        "modal_type",
-        "curate_corpus",
-        "knn_classify",
-        "embedding_centroids",
-        "conversion_funnel",
-        "weekly_retention",
-        "multimodal_meta",
-        "multimodal_frames",
-        "cumulative_users",
-        "event_transitions",
-        "first_last_touch",
-        "corr_stats",
-        "price_histogram",
-        "grouping_sets",
-        "range_rolling",
-        "active_suppliers",
-        "similarity_lsh_recall",
-        "similarity_ivf_recall",
-        # --- oldest r3-era block (last driver-verified in round 3) ---
-        "multimodal_decode",
-        "multimodal_features",
-        "streaming_weekly",
-        "streaming_sessions",
-        "streaming_dedup",
-        "streaming_funnel",
-        "multimodal_decode_check",
-        "multimodal_features_check",
-        # with the 4 r7 additions the window edge lands here: the
-        # oracle-gated audio check takes slot 50; its rows-only twin
-        # sits first past the edge and is re-verified in r8
-        "multimodal_audio_check",
-        "multimodal_audio",
-    ]
-)
-QUERIES = {
-    name: QUERIES[name]
-    for name in _R7_FRONT + [q for q in QUERIES if q not in _R7_FRONT]
-}
-
-
-# Round-8 window rotation. Unlike r1-r7's age-only plans, this order is
-# MECHANICAL: tools/rotation.py traces every query's q-function through
-# the repo's static call graph and requires a window slot for each
-# query whose reachable code, oracle SQL, or registered binding changed
-# since the round-close commit of its last green CORRECTNESS row
-# (round-7 verdict item 3 — r7 changed qa_metrics, mg_heavy_hitters,
-# BPE, and pca_fit without driver re-verification, and the age-keyed
-# rotation would not have resurfaced them for rounds). Priority: the
-# never-verified addition first, then the 26 stale queries (the rule
-# also surfaced name_entities, fuzzy_snm_recall, sketch_cms_check,
-# peak_sessions, dedup_simhash_complete, dedup_minhash_recall —
-# touched in r5-r7 after their last check and missed by every manual
-# plan), then the oldest-verified (r3-era) names filling to the
-# ~50-slot driver edge. tests/test_registry.py pins this list AGAINST
-# THE TOOL, so any code change that staled a verified query breaks the
-# suite until the query re-enters the window.
-_R8_FRONT: list[str] = [
-    # new (never driver-verified)
-    "epoch_shards",
-    # stale: implementation/oracle changed since last green row
-    "dedup_minhash_recall",
-    "dedup_simhash_complete",
-    "dsir_scores",
-    "importance_resample",
-    "fuzzy_snm_recall",
-    "ewma_weekly",
-    "cusum_weekly",
-    "theil_sen_weekly",
-    "holt_weekly",
-    "name_entities",
-    "simjoin_prefix",
-    "sketch_cms_check",
-    "similarity_ivfpq",
-    "similarity_ivfpq_recall",
-    "similarity_pq",
-    "similarity_pq_recall",
-    "peak_sessions",
-    "similarity_ivfpq_res",
-    "similarity_ivfpq_res_recall",
-    "pca_scores",
-    "pca_check",
-    "mg_heavy_hitters",
-    "matryoshka_recall",
-    "bpe_encode",
-    "bpe_encode_check",
-    "qa_metrics",
-    "incremental_near_gate",
-    # oldest-verified fill (last driver check r3), registry order
-    "multimodal_audio",
-    "embedding_near_dup_lsh_recall",
-    "dedup_keep_best",
-    "tfidf_top_terms",
-    "ngram_novelty",
-    "pack_sequences",
-    "salted_event_stats",
-    "session_summary",
-    "temperature_mix",
-    "transition_probs",
-    "weekly_approx_check",
-    "decontaminate_bloom_check",
-    "dedup_ngram_capped",
-    "lm_scores",
-    "semantic_dedup",
-    "semantic_dedup_check",
-    "source_overlap",
-    "bm25_scores",
-    "dup_span_stats",
-    "perplexity_buckets",
-    "heavy_hitters",
-    "key_skew",
-]
-# r3-era names the 50-slot window cannot fit this round (28 required
-# slots + 22 oldest-fill): they sit immediately past the edge and lead
-# the r9 rotation. All nine were hash-verified green by the builder's
-# own selfcheck at r8 HEAD (tools/selfcheck.py, recorded in SCALE.md)
-# and by the round-7 judge's independent DuckDB sweep.
-_R8_QUEUE: list[str] = [
-    "zorder_cells",
-    "incremental_dedup",
-    "scd2_history",
-    "debounce_events",
-    "cap_events",
-    "snapshot_diff",
-    "user_sequences",
-    "doc_chunks",
-    "streaming_attribution",
-]
-QUERIES = {
-    name: QUERIES[name]
-    for name in _R8_FRONT
-    + _R8_QUEUE
-    + [q for q in QUERIES if q not in _R8_FRONT and q not in _R8_QUEUE]
-}
-
-# Round-9 window rotation (tools/rotation.py --plan at r9 HEAD). 43
-# required: the empty/NULL-document tokenization fixes (split("") ==
-# [""]; size(null) is null) ripple through the shared Spark tokenizers
-# (_word_shingles, _tokens, _bpe_words, _doc_ngrams,
-# simhash/exact_substr/cdc/pack/chunks) AND the shared DuckDB oracle
-# macro _TOKS, staling the whole shingle/text-quality family; plus the
-# sketch_quantiles rank-band gate fix. Then the 7 remaining r3-era
-# names (the r8 queue — their last driver check is 5 rounds old) fill
-# to exactly the 50-slot edge. last_verified() now counts only GREEN
-# rows, and emit_front fills from the full oldest-first ordering
-# (round-8 advice) — both behavior-neutral on today's files.
-_R9_FRONT: list[str] = [
-    # stale: implementation and/or oracle changed since last green row
-    "incremental_dedup",
-    "doc_chunks",
-    "pmi_pairs",
-    "bpe_merges",
-    "split_leakage",
-    "quality_calibrate",
-    "vocab_growth",
-    "dedup_containment",
-    "strip_boilerplate",
-    "cdc_chunk_dedup",
-    "cluster_split",
-    "dedup_ngram_jaccard",
-    "dedup_clusters",
-    "top_ngrams",
-    "dedup_minhash",
-    "dedup_simhash",
-    "sketch_quantiles",
-    "lang_id",
-    "decontaminate",
-    "repetition_stats",
-    "dedup_exact_substr",
-    "dedup_exact_substr_spans",
-    "dedup_exact_substr_trim",
-    "dedup_exact_substr_agree",
-    "text_stats",
-    "quality_score",
-    "filter_funnel",
-    "token_histogram",
-    "source_cap",
-    "curate_corpus",
-    "dedup_minhash_recall",
-    "dedup_simhash_complete",
-    "simjoin_prefix",
-    "incremental_near_gate",
-    "dedup_keep_best",
-    "ngram_novelty",
-    "pack_sequences",
-    "decontaminate_bloom_check",
-    "dedup_ngram_capped",
-    "source_overlap",
-    "dup_span_stats",
-    "bpe_encode",
-    "bpe_encode_check",
-    # r3-era (last driver check 5 rounds old — the r8 queue)
-    "zorder_cells",
-    "scd2_history",
-    "debounce_events",
-    "cap_events",
-    "snapshot_diff",
-    "user_sequences",
-    "streaming_attribution",
-]
-# 43 required + the seven 5-round-old r3-era names = exactly 50: the
-# null-text round of fixes pulled the bpe_encode twins in and pushed
-# the two r4-era fill slots out. The r4 era (31 names) leads r10.
-_R9_QUEUE: list[str] = []
-QUERIES = {
-    name: QUERIES[name]
-    for name in _R9_FRONT
-    + _R9_QUEUE
-    + [q for q in QUERIES if q not in _R9_FRONT and q not in _R9_QUEUE]
-}
-
-# ---------------------------------------------------------------------------
-# Round-10 driver window (tools/rotation.py --plan after the round's
-# code landed). Required set (40): the two r9 tripwired null-edge fixes
-# (sample_frames null payload, winsorized_stats NULL clipping), the six
-# more of the same class the r10 empty/NULL sweep found and fixed
-# (redact_pii NULL-text PII counts; fuzzy_pair_histogram's compressed
-# path counting the NULL-name group as distance-0 pairs — stales the
-# linkage family; scd2_history's non-null-safe change test swallowing
-# mid-stream NULL states; snapshot_diff conflating NULL-text hashes
-# with absence; apply_cdc letting a corrupt trailing record delete the
-# entity; asof_join matching NULL timestamps), the four LIVE CRASHES
-# the sweep found (bytes(None) in the three Arrow media kernels —
-# stales the multimodal family — and KLL_INVALID_INPUT_SKETCH_BUFFER on
-# an all-NULL-value group in quantile_sketch_summary; NaN state
-# poisoning in the stateful streaming scorer) plus the CMS
-# integral-key fail-fast, plus the 19 artifact-consumer queries staled
-# by the traced-closure fit-salt rewrite (which also re-drives the
-# similarity/IVF family the r9 verdict flagged for a drift confirm).
-# Fill: the 10 oldest r4-era names. The displaced r4-era names lead the
-# r11 queue, followed by the r5 era.
-_R10_FRONT: list[str] = [
-    "fuzzy_pair_stats",
-    "fuzzy_pair_stats_bucketed",
-    "rare_token_linkage",
-    "asof_forward",
-    "multimodal_phash",
-    "multimodal_phash_pairs",
-    "streaming_anomaly",
-    "cdc_replay",
-    "winsorized_prices",
-    "redact_pii",
-    "asof_join",
-    "multimodal_frames",
-    "multimodal_decode",
-    "multimodal_features",
-    "multimodal_decode_check",
-    "multimodal_features_check",
-    "similarity_ivfpq",
-    "similarity_ivfpq_recall",
-    "similarity_pq",
-    "similarity_pq_recall",
-    "similarity_ivfpq_res",
-    "similarity_ivfpq_res_recall",
-    "embedding_near_dup_lsh_recall",
-    "semantic_dedup_check",
-    "fuzzy_snm_recall",
-    "multimodal_audio",
-    "sketch_cms_check",
-    "cluster_split",
-    "dedup_ngram_jaccard",
-    "dedup_clusters",
-    "dedup_simhash",
-    "dedup_exact_substr",
-    "dedup_exact_substr_spans",
-    "dedup_exact_substr_trim",
-    "dedup_exact_substr_agree",
-    "dedup_minhash_recall",
-    "dedup_simhash_complete",
-    "incremental_near_gate",
-    "scd2_history",
-    "snapshot_diff",
-    "sketch_quantiles",
-    "clean_transactions",
-    "weekly_by_la",
-    "rolling_windows",
-    "anomalies",
-    "latest_snapshot",
-    "cohort_matrix",
-    "funnel_timing",
-    "value_trend",
-    "semantic_decontaminate",
-]
-# r4-era names displaced past the window edge: they lead the r11 window.
-_R10_QUEUE: list[str] = [
-    "psi_drift",
-    "attribution_credit",
-    "embedding_health",
-    "table_profile",
-    "twap",
-    "join_cardinality",
-    "streaming_rate_cap",
-    "rrf_fusion",
-    "trimmed_stats",
-    "fuzzy_matches",
-    "interarrival_stats",
-    "benford_prices",
-    "basket_lift",
-    "streaming_distinct_check",
-    "embedding_covariance",
-    "hard_negatives",
-    "top_paths",
-]
-QUERIES = {
-    name: QUERIES[name]
-    for name in _R10_FRONT
-    + _R10_QUEUE
-    + [q for q in QUERIES if q not in _R10_FRONT and q not in _R10_QUEUE]
-}
-
-
 # ---------------------------------------------------------------------------
 # Round 11: batch-equivalence oracle gate for the stateful anomaly
 # drain. Window SQL mirror of the drain's prequential semantics — the
@@ -10887,356 +10247,6 @@ SELECT key, event_id, ts, value,
 FROM s
 """
 QUERIES["streaming_anomaly_check"] = q_streaming_anomaly_check
-
-
-# ---------------------------------------------------------------------------
-# Round-11 driver window (tools/rotation.py --plan at round close).
-# Required set (35): the NEW batch-equivalence gate for the stateful
-# anomaly drain (streaming_anomaly_check); the 13 drains switched to
-# measured-group state-store sizing plus the anomaly drain's
-# deterministic (ts, event_id) fold — staling the whole streaming
-# family except attribution (r9-fresh, deliberately left on the old
-# helper until it rotates naturally in r12); the 19 artifact-consumer
-# queries staled by re-rooting the fit salts at the contract builder
-# helpers (r10 advice: builder literals are now inside the hash);
-# sketch_quantiles (one-shot rank-band retry); multimodal_audio_check
-# (NULL-payload guard + pinned gate independence). Fill (15): the
-# entire remaining r4 era — with the two r4 streaming names already
-# required, this clears the r4 rotation debt completely (r10 verdict
-# item 2: nothing older than r5 after this window). Queue: empty — the
-# fill consumed the oldest era exactly; the r5 era (36 names) leads r12.
-_R11_FRONT: list[str] = [
-    "streaming_anomaly_check",
-    "streaming_rate_cap",
-    "streaming_distinct_check",
-    "streaming_enriched",
-    "streaming_cdc",
-    "streaming_joined_agg",
-    "streaming_joined_outer",
-    "streaming_joined",
-    "streaming_mg_topk",
-    "streaming_weekly",
-    "streaming_sessions",
-    "streaming_dedup",
-    "streaming_funnel",
-    "multimodal_audio_check",
-    "streaming_anomaly",
-    "similarity_ivfpq",
-    "similarity_ivfpq_recall",
-    "similarity_pq",
-    "similarity_pq_recall",
-    "similarity_ivfpq_res",
-    "similarity_ivfpq_res_recall",
-    "embedding_near_dup_lsh_recall",
-    "semantic_dedup_check",
-    "cluster_split",
-    "dedup_ngram_jaccard",
-    "dedup_clusters",
-    "dedup_simhash",
-    "dedup_exact_substr",
-    "dedup_exact_substr_spans",
-    "dedup_exact_substr_trim",
-    "dedup_exact_substr_agree",
-    "dedup_minhash_recall",
-    "dedup_simhash_complete",
-    "incremental_near_gate",
-    "sketch_quantiles",
-    "psi_drift",
-    "attribution_credit",
-    "embedding_health",
-    "table_profile",
-    "twap",
-    "join_cardinality",
-    "rrf_fusion",
-    "trimmed_stats",
-    "fuzzy_matches",
-    "interarrival_stats",
-    "benford_prices",
-    "basket_lift",
-    "embedding_covariance",
-    "hard_negatives",
-    "top_paths",
-]
-_R11_QUEUE: list[str] = []
-QUERIES = {
-    name: QUERIES[name]
-    for name in _R11_FRONT
-    + _R11_QUEUE
-    + [q for q in QUERIES if q not in _R11_FRONT and q not in _R11_QUEUE]
-}
-
-
-# ---------------------------------------------------------------------------
-# Round-12 driver window (tools/rotation.py --plan at round close).
-# Required set (15): streaming_attribution (constant-8 helper ->
-# measured-group sizing, the r11 deliberate deferral),
-# streaming_enriched (composite-key sizing + non-finite value-sum
-# guard), streaming_anomaly + streaming_anomaly_check (the fold's
-# GROUP_BATCH_MAX_ROWS memory guard, r11 verdict item 4, plus the ±Inf
-# state-poisoning guard), sketch_quantiles (retry group-set mismatch
-# fails the band instead of KeyError), streaming_distinct_check
-# (sizing shares the weekly drain's memo slot), and the pairs the r12
-# NaN/Inf fuzz repaired on both engines: benford_prices, twap,
-# peak_sessions, trimmed_stats, winsorized_prices, streaming_weekly,
-# seasonality_profile, mg_heavy_hitters + streaming_mg_topk (Spark's
-# floor/quantization silently saturates non-finite values where DuckDB
-# raises — every fix filters or NULLs them identically on both
-# engines; each pinned by a hypothesis block in
-# tests/test_properties_r12.py). Fill (35) = the rest of the r5 era —
-# the window is exactly full, so the same class in the three
-# stream-stream join gates and salted_event_stats is DEFERRED to r13
-# (documented in SCALE.md; unreachable on shipped data).
-# # required=15 (new=0), fill=35 (through r5-era), queue=0
-_R12_FRONT: list[str] = [
-    "seasonality_profile",
-    "peak_sessions",
-    "mg_heavy_hitters",
-    "streaming_attribution",
-    "winsorized_prices",
-    "streaming_enriched",
-    "streaming_anomaly",
-    "sketch_quantiles",
-    "benford_prices",
-    "streaming_distinct_check",
-    "twap",
-    "trimmed_stats",
-    "streaming_anomaly_check",
-    "streaming_mg_topk",
-    "streaming_weekly",
-    "copurchase_triangles",
-    "pagerank_trade",
-    "degree_profile",
-    "communities",
-    "weighted_sample",
-    "sql_weekly_by_la",
-    "ks_values",
-    "ab_ztest",
-    "weekly_churn",
-    "mannwhitney_values",
-    "chi2_type_split",
-    "pareto_parts",
-    "rollup_lineitem",
-    "pricing_summary",
-    "shipping_priority",
-    "revenue_by_nation",
-    "top_customers",
-    "order_priority",
-    "customers_without_orders",
-    "brand_revenue",
-    "promo_revenue",
-    "large_orders",
-    "idle_capital",
-    "top_supplier",
-    "nation_pair_trade",
-    "market_share",
-    "product_profit",
-    "late_shipments",
-    "order_count_distribution",
-    "supplier_variety",
-    "small_qty_revenue",
-    "disjunctive_revenue",
-    "slow_suppliers",
-    "important_parts",
-    "min_cost_supplier",
-]
-_R12_QUEUE: list[str] = [
-]
-QUERIES = {
-    name: QUERIES[name]
-    for name in _R12_FRONT
-    + _R12_QUEUE
-    + [q for q in QUERIES if q not in _R12_FRONT and q not in _R12_QUEUE]
-}
-
-# ROUND-13 WINDOW (tools/rotation.py --plan at the r13 tree): required
-# (43) = the r12-deferred non-finite unit-sum class
-# (streaming_joined{,_outer,_agg}, salted_event_stats, value_trend),
-# the embedding component guards, the as-of determinism rework, and the
-# registry-wide adversarial sweep's haul
-# (tools/stress_adversarial_registry.py — the weekly-mart chain's price
-# guard, the sessionize NULL-ts/tie fixes, the relational family's
-# revenue/quantity/profit guards, the rank-population NULL exclusions
-# in trimmed_stats, the corr/histogram/grouping-sets guards, band_join
-# overflow, psi_drift bucketing, sketch percentile parity) +
-# streaming_anomaly (the stateful fold's 50%-cap advance warning).
-# Fill (7) = the oldest remaining r6 names; the displaced 16 r6 names
-# queue for r14 — this round spent its slots on CLOSING 30+ proven
-# defects rather than finishing the r6 era (the close-tree selfcheck
-# covers every deferred name at HEAD as independent evidence).
-# (the close-profile fuzz then added sketch_weekly_distinct's and
-# sketch_cardinalities' empty-group DIVIDE_BY_ZERO guards, and the
-# correlated in-filter probe added the five relational pairs it proved:
-# idle_capital, promo_revenue, revenue_filter, top_supplier,
-# top_customers)
-# # required=49 (new=0), fill=1 (through r6-era), queue=20
-
-# ROUND-14 WINDOW (tools/rotation.py --plan at the r14 tree): required
-# (33) = the vector family behind the new valid-embeddings ingest
-# boundary (the `embeddings` sweep axis crashed 25 of its 27 pairs on
-# one NULL/ragged/non-finite/zero vector; q-functions now read through
-# contract._emb_valid, oracles through the embeddings_valid CTE, and
-# similarity_ivf/_recall share one cached coarse fit), the six
-# co-location relational pairs the new price_reach axis proved
-# (RED-before/CLEAN-after; slow_suppliers reached and clean unguarded),
-# corr_stats (oracle now mirrors the Spark post-agg division), and the
-# streaming_anomaly pair (module-level logger hoist; the twin rides via
-# the new rows-only pairing rule). Fill (17) = the entire remaining
-# r6 era, closing it; queue empty. Deliberate residual: 12 r7-era
-# names wait for r15 — the window chose 25 crash-pair repairs over
-# finishing the era (each deferred name's closure is unchanged and the
-# close-tree selfcheck covers it at HEAD).
-# # required=33 (new=0), fill=17 (through r6-era), queue=0
-
-# ROUND-15 WINDOW (tools/rotation.py at the r15 optimization tree):
-# required (37) = every query whose executed code this round's
-# optimizations touched — the full vector family behind the new
-# emb_valid fit artifact (contract._emb_valid + _FIT_SALT_ROOTS entry
-# stales all 25 consumers AND the 11 dedup/fit-cache names whose kinds
-# share the roots dict), the PQ/IVFPQ six (pq._codebook_dense /
-# _dtab_from_dense), the LSH/SemDeDup kernels
-# (similarity._seq_pairdot, block split, BLOCK_SPLIT_MIN_BYTES),
-# embedding_covariance (NULL-fill + int64 block bound), and
-# multimodal_phash_pairs (decode-once checkpoint). Fill (13) = the
-# oldest remaining r7/r8-era names; the displaced 16 r8-era names
-# queue for r16.
-# # required=37 (new=0), fill=13 (through r8-era), queue=16
-# qa_metrics re-entered as required after q_qa_metrics switched from
-# the fused form to the pipeline's qa_metrics over weekly_mart, and
-# ks_values after its oracle gained the absent-group NULL guard the
-# operator already had; the two newest fill names (epoch_shards, r8;
-# active_suppliers, r7) moved to the head of the queue.
-# # required=39 (new=0), fill=11 (through r7-era), queue=17
-# weekly_mart dropped its presentation orderBy (the pipeline sorts the
-# weekly_by_la artifact instead), which stales the eight queries that
-# reach it: weekly_by_la, grid_weekly, rolling_windows, anomalies,
-# latest_snapshot, gap_interpolation, range_rolling, week_over_week.
-# The three fill slots left go to the oldest r7-era names.
-# # required=47 (new=0), fill=3 (through r7-era), queue=9
-_R15_FRONT: list[str] = [
-    "qa_metrics",
-    "multimodal_phash_pairs",
-    "cluster_split",
-    "dedup_ngram_jaccard",
-    "dedup_clusters",
-    "dedup_simhash",
-    "dedup_exact_substr",
-    "dedup_exact_substr_spans",
-    "dedup_exact_substr_trim",
-    "dedup_exact_substr_agree",
-    "dedup_minhash_recall",
-    "dedup_simhash_complete",
-    "incremental_near_gate",
-    "ks_values",
-    "weekly_by_la",
-    "rolling_windows",
-    "anomalies",
-    "latest_snapshot",
-    "gap_interpolation",
-    "range_rolling",
-    "grid_weekly",
-    "week_over_week",
-    "similarity_lsh",
-    "similarity_ivf",
-    "embedding_near_dup",
-    "similarity_topk",
-    "embedding_near_dup_lsh",
-    "embedding_quantize",
-    "knn_classify",
-    "embedding_centroids",
-    "similarity_lsh_recall",
-    "similarity_ivf_recall",
-    "pca_scores",
-    "pca_check",
-    "matryoshka_recall",
-    "semantic_dedup",
-    "semantic_decontaminate",
-    "similarity_ivfpq",
-    "similarity_ivfpq_recall",
-    "similarity_pq",
-    "similarity_pq_recall",
-    "similarity_ivfpq_res",
-    "similarity_ivfpq_res_recall",
-    "embedding_near_dup_lsh_recall",
-    "semantic_dedup_check",
-    "embedding_covariance",
-    "hard_negatives",
-    "range_join",
-    "doc_fingerprint",
-    "robust_anomalies",
-]
-_R15_QUEUE: list[str] = [
-    "lapsed_parts",
-    "repeat_customers",
-    "modal_type",
-    "conversion_funnel",
-    "weekly_retention",
-    "multimodal_meta",
-    "cumulative_users",
-    "event_transitions",
-    "active_suppliers",
-]
-
-# r14 window kept for the historical record (superseded by _R15_FRONT)
-_R14_FRONT: list[str] = [
-    "similarity_lsh",
-    "similarity_ivf",
-    "embedding_near_dup",
-    "similarity_topk",
-    "embedding_near_dup_lsh",
-    "embedding_quantize",
-    "knn_classify",
-    "embedding_centroids",
-    "similarity_lsh_recall",
-    "similarity_ivf_recall",
-    "pca_scores",
-    "pca_check",
-    "matryoshka_recall",
-    "semantic_dedup",
-    "semantic_decontaminate",
-    "similarity_ivfpq",
-    "similarity_ivfpq_recall",
-    "similarity_pq",
-    "similarity_pq_recall",
-    "similarity_ivfpq_res",
-    "similarity_ivfpq_res_recall",
-    "embedding_near_dup_lsh_recall",
-    "semantic_dedup_check",
-    "embedding_covariance",
-    "hard_negatives",
-    "streaming_anomaly_check",
-    "shipping_priority",
-    "revenue_by_nation",
-    "market_share",
-    "small_qty_revenue",
-    "disjunctive_revenue",
-    "corr_stats",
-    "streaming_anomaly",
-    "bloom_join_prune",
-    "link_prediction",
-    "acf_weekly",
-    "salted_join_stats",
-    "sketch_intersection_check",
-    "expectations",
-    "dedup_exact",
-    "type_breakdown",
-    "coverage_report",
-    "props_json",
-    "quality_checks",
-    "latest_by_key",
-    "weekly_type_pivot",
-    "hash_sample",
-    "dataset_split",
-    "stratified_sample",
-    "corpus_cube",
-]
-_R14_QUEUE: list[str] = [
-]
-QUERIES = {
-    name: QUERIES[name]
-    for name in _R15_FRONT
-    + _R15_QUEUE
-    + [q for q in QUERIES if q not in _R15_FRONT and q not in _R15_QUEUE]
-}
 
 
 # ---------------------------------------------------------------------

@@ -81,8 +81,8 @@ def fuzzy_pairs(
     the corpus ("THE …" product names): the quadratic term shrinks from
     the token-block size to the largest (token, length-cell) size, and
     the output is IDENTICAL to the unbucketed run (pinned by the
-    ``fuzzy_pair_stats_bucketed`` driver query sharing the unbucketed
-    oracle, and by ``tools/stress_linkage.py``'s dominant-token run).
+    ``fuzzy_pair_stats_bucketed`` registry query sharing the unbucketed
+    oracle).
 
     Plan: one shuffle keyed by the (composite) block on compact
     (key, name, len) rows; Levenshtein evaluates JVM-side inside the
@@ -206,8 +206,8 @@ def sorted_neighborhood_pairs(
     bucket, so the band predicate only trims inside ≈window-sized hash
     groups. Joining equi on block alone and filtering the band AFTER
     would enumerate the full quadratic block pairs first — measured 10×
-    slower than the blocked join at 200k rows (tools/stress_linkage.py)
-    — exactly the mistake this shape exists to avoid. ``key_a < key_b``
+    slower than the blocked join at 200k rows — exactly the mistake
+    this shape exists to avoid. ``key_a < key_b``
     holds because ranks are a total order and only forward neighbors
     join.
     """

@@ -36,7 +36,7 @@ from uk_housing_dashboard_etl_spark.functions.cleaning import (
 )
 
 
-def standardize_transactions(df_raw: DataFrame, normalize_key: bool = True) -> DataFrame:
+def standardize_transactions(df_raw: DataFrame) -> DataFrame:
     """P1-P9: discover columns by substring, coerce, normalize, drop bad dates.
 
     Output schema: ``date timestamp, transaction_id string, price double,
@@ -65,9 +65,7 @@ def standardize_transactions(df_raw: DataFrame, normalize_key: bool = True) -> D
         # partition-parallel (no global coordination).
         tid = F.monotonically_increasing_id()
     if roles["postcode"]:
-        key = normalize_code(F.col(roles["postcode"])) if normalize_key else F.col(
-            roles["postcode"]
-        ).cast("string")
+        key = normalize_code(F.col(roles["postcode"]))
     else:
         key = F.lit(None).cast("string")
     prop = (
@@ -87,32 +85,22 @@ def standardize_transactions(df_raw: DataFrame, normalize_key: bool = True) -> D
     )
 
 
-def enrich_with_lookup(
-    tx: DataFrame,
-    lookup: DataFrame | None,
-    lookup_key: str = "key",
-    lookup_value: str = "local_authority",
-    fallback_prefix: int = 4,
-    broadcast_hint: bool = True,
-) -> DataFrame:
+def enrich_with_lookup(tx: DataFrame, lookup: DataFrame | None) -> DataFrame:
     """J1: left broadcast-hash equi-join onto the dimension lookup.
 
-    ``lookup`` must have columns (``lookup_key``, ``lookup_value``) —
-    already normalized. With no lookup, falls back to the prefix projection
-    (P8), mirroring the reference (ref ``etl/etl_main.py:182,190``).
+    ``lookup`` must have columns (``key``, ``local_authority``) — already
+    normalized. With no lookup, falls back to the 4-character postcode
+    prefix (P8), mirroring the reference (ref ``etl/etl_main.py:182,190``).
     Unmatched keys keep the row with a null ``local_authority``.
 
-    ``broadcast_hint=True`` is right for dimension-sized lookups (a UK
-    postcode map ≈ 50 MB). Pass False for a lookup that outgrows executor
-    memory — the normalized high-cardinality key shuffle-joins evenly.
+    The lookup is always broadcast: it is dimension-sized (a UK postcode
+    map ≈ 50 MB).
     """
     if lookup is None:
-        return tx.withColumn(lookup_value, prefix_key(F.col("key"), fallback_prefix))
-    dim = lookup.select(
-        F.col(lookup_key).alias("__lk"), F.col(lookup_value).alias(lookup_value)
+        return tx.withColumn("local_authority", prefix_key(F.col("key")))
+    dim = F.broadcast(
+        lookup.select(F.col("key").alias("__lk"), F.col("local_authority"))
     )
-    if broadcast_hint:
-        dim = F.broadcast(dim)
     return tx.join(dim, tx["key"] == dim["__lk"], "left").drop("__lk")
 
 
