@@ -8,6 +8,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from urllib.parse import urlparse
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -97,7 +98,7 @@ def test_cached_fit_large_refits_after_a_table_rewrite(spark, monkeypatch, tmp_p
     fits.append(contract._cached_fit_large(spark, sf, "tfkind", builder))
     assert calls["n"] == 2
     for df in fits:
-        shutil.rmtree(os.path.dirname(df.inputFiles()[0]), ignore_errors=True)
+        shutil.rmtree(os.path.dirname(urlparse(df.inputFiles()[0]).path), ignore_errors=True)
 
 
 def test_cached_fit_refits_after_a_table_rewrite(spark, tmp_path):

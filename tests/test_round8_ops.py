@@ -4,6 +4,8 @@ verified surface)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from uk_housing_dashboard_etl_spark.operators.curation import epoch_shards
@@ -108,6 +110,10 @@ def test_cached_fit_large_builds_once_and_salts_on_code_change(
     """Corpus-sized fit artifacts go to write-once parquet: the builder
     runs exactly once per (sf_dir, kind, code-salt); changing the
     fitting code (different salt) must invalidate the path."""
+    import shutil
+    import uuid
+    from urllib.parse import urlparse
+
     from uk_housing_dashboard_etl_spark import contract
 
     calls = {"n": 0}
@@ -116,17 +122,26 @@ def test_cached_fit_large_builds_once_and_salts_on_code_change(
         calls["n"] += 1
         return spark.range(5).selectExpr("id", "id * 2 AS v")
 
-    monkeypatch.setattr(contract, "_fit_code_salt", lambda mods=(): "saltAAAA")
+    # salts unique to this run: the on-disk cache outlives the run, and
+    # an artifact left by an earlier run under the same (reused) tmp_path
+    # would otherwise be served without calling the builder
+    run = uuid.uuid4().hex
+    monkeypatch.setattr(contract, "_fit_code_salt", lambda mods=(): f"saltA{run}")
     sf = str(tmp_path)  # unique sf_dir so no collision with real caches
-    a = contract._cached_fit_large(spark, sf, "t8kind", builder)
-    assert sorted(r["v"] for r in a.collect()) == [0, 2, 4, 6, 8]
-    b = contract._cached_fit_large(spark, sf, "t8kind", builder)
-    assert calls["n"] == 1  # reused from parquet, builder not re-run
-    assert sorted(map(tuple, b.collect())) == sorted(map(tuple, a.collect()))
-    # a code change (new salt) must rebuild rather than serve stale data
-    monkeypatch.setattr(contract, "_fit_code_salt", lambda mods=(): "saltBBBB")
-    contract._cached_fit_large(spark, sf, "t8kind", builder)
-    assert calls["n"] == 2
-    # no clear_large_fit_cache() here: a concurrent bench owns the
-    # cache dir; the two 5-row test artifacts are swept at the next
-    # bench suite start
+    built = []
+    try:
+        a = contract._cached_fit_large(spark, sf, "t8kind", builder)
+        built.append(a)
+        assert sorted(r["v"] for r in a.collect()) == [0, 2, 4, 6, 8]
+        b = contract._cached_fit_large(spark, sf, "t8kind", builder)
+        assert calls["n"] == 1  # reused from parquet, builder not re-run
+        assert sorted(map(tuple, b.collect())) == sorted(map(tuple, a.collect()))
+        # a code change (new salt) must rebuild rather than serve stale data
+        monkeypatch.setattr(contract, "_fit_code_salt", lambda mods=(): f"saltB{run}")
+        built.append(contract._cached_fit_large(spark, sf, "t8kind", builder))
+        assert calls["n"] == 2
+    finally:
+        # remove only this test's artifacts: other runs share the cache dir
+        for df in built:
+            for f in df.inputFiles():
+                shutil.rmtree(os.path.dirname(urlparse(f).path), ignore_errors=True)

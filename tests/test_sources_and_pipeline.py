@@ -136,17 +136,17 @@ def test_csv_read_is_all_strings(spark, tmp_path):
 
 
 def test_refresh_computes_each_mart_once(spark, tmp_path):
-    """After a refresh has written its artifacts, re-reading a mart costs
-    one Spark job: ``qa``, ``windows`` and ``anomalies`` come from their
-    materialized caches, not from the CSV or a second densify → rolling."""
+    """A refresh collects its QA facts once and computes each mart once:
+    the whole run costs a fixed number of Spark jobs, and after it
+    re-reading a mart costs one job. ``qa`` and ``coverage`` are one-row
+    frames of the collected facts, ``windows``, ``anomalies`` and
+    ``latest`` read the materialized grid, not the CSV or a second
+    densify → rolling."""
     import uuid
 
     sc = spark.sparkContext
     raw = read_csv_sniffed(spark, _clean_ppd(tmp_path), require_price_and_date=True)
     arts = str(tmp_path / "artifacts")
-    outputs = HousingPipeline(
-        spark, raw, _normalized_lookup(spark, tmp_path), PipelineConfig(artifacts_dir=arts)
-    ).run()
 
     def jobs(action) -> int:
         group = f"mart-once-{uuid.uuid4().hex}"
@@ -157,12 +157,82 @@ def test_refresh_computes_each_mart_once(spark, tmp_path):
             sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
+    outputs = {}
+    pipe = HousingPipeline(
+        spark, raw, _normalized_lookup(spark, tmp_path), PipelineConfig(artifacts_dir=arts)
+    )
+    # 31 while qa, coverage and latest re-derived their facts in their plans
+    assert jobs(lambda: outputs.update(pipe.run())) == 27
+
     def noop(name):
         return lambda: outputs[name].write.format("noop").mode("overwrite").save()
 
     assert jobs(outputs["qa"].collect) == 1
     assert jobs(noop("windows")) == 1
     assert jobs(noop("anomalies")) == 1
+    assert jobs(noop("latest")) == 1
+    assert jobs(noop("coverage")) == 1
+
+
+def _qa_row(outputs) -> dict:
+    (row,) = outputs["qa"].collect()
+    return row.asDict()
+
+
+def test_refresh_without_parseable_dates_writes_every_artifact(spark, tmp_path):
+    """A CSV with no parseable ``date_of_transfer`` leaves no row to
+    divide coverage by: the refresh still writes all seven artifacts, and
+    ``coverage_pct`` is NULL, as in the oracle, not an ANSI
+    division-by-zero error raised after half the artifacts are written."""
+    p = tmp_path / "ppd_bad_dates.csv"
+    rows = ["transaction_unique_id,price,date_of_transfer,postcode,property_type"]
+    rows += [f"t{i},{1000 * (i + 1)},not-a-date-{i},AA1 1AA,D" for i in range(7)]
+    p.write_text("\n".join(rows) + "\n")
+    raw = read_csv_sniffed(spark, str(p), require_price_and_date=True)
+    arts = str(tmp_path / "artifacts")
+    outputs = HousingPipeline(
+        spark, raw, _normalized_lookup(spark, tmp_path), PipelineConfig(artifacts_dir=arts)
+    ).run()
+
+    for name in outputs:
+        assert glob.glob(os.path.join(arts, name, "part-*.csv")), f"missing artifact {name}"
+    assert _qa_row(outputs) == {
+        "rows_raw": 7,
+        "las": 0,
+        "latest_week": None,
+        "coverage_pct": None,
+    }
+    assert outputs["coverage"].collect()[0].asDict() == {
+        "total_tx": 0,
+        "mapped_tx": 0,
+        "coverage_pct": None,
+    }
+
+
+def test_rows_raw_counts_csv_records_not_joined_rows(spark, tmp_path):
+    """A lookup mapping one normalized key to two LAs duplicates that
+    key's rows in the left join. ``coverage.total_tx`` counts the joined
+    rows; ``rows_raw`` stays the CSV's record count."""
+    from pyspark.sql import functions as F
+
+    from uk_housing_dashboard_etl_spark.functions.cleaning import normalize_code
+
+    lp = tmp_path / "lookup_dup.csv"
+    # "AA1 1AA" and "aa11aa" normalize to the same key
+    lp.write_text("postcode,local_authority\nAA1 1AA,Alpha\naa11aa,Gamma\nBB2 2BB,Beta\n")
+    lookup = read_lookup_csv(spark, str(lp)).select(
+        normalize_code(F.col("postcode")).alias("key"), "local_authority"
+    )
+    raw = read_csv_sniffed(spark, _clean_ppd(tmp_path), require_price_and_date=True)
+    outputs = HousingPipeline(spark, raw, lookup).run()
+
+    # 60 records: 20 each of AA1 1AA (now joined twice), BB2 2BB, CC3 3CC
+    coverage = outputs["coverage"].collect()[0]
+    assert (coverage["total_tx"], coverage["mapped_tx"]) == (80, 60)
+    qa = _qa_row(outputs)
+    assert qa["rows_raw"] == 60
+    assert qa["las"] == 3
+    assert qa["coverage_pct"] == coverage["coverage_pct"] == 75.0
 
 
 def test_weekly_artifact_keeps_reference_order(spark, tmp_path):

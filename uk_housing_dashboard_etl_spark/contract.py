@@ -37,6 +37,7 @@ from uk_housing_dashboard_etl_spark.operators import (
     type_breakdown,
     weekly_mart,
 )
+from uk_housing_dashboard_etl_spark.operators.snapshot import COVERAGE_COLUMNS, fact_row
 from uk_housing_dashboard_etl_spark.operators.relational import (
     brand_revenue,
     customers_without_orders,
@@ -254,8 +255,10 @@ def q_type_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_coverage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A9/A10: lookup-coverage QA row."""
-    return _round(coverage_report(_enriched(spark, sf_dir)), ["coverage_pct"])
+    """A9/A10: lookup-coverage QA row, built as the pipeline builds its
+    ``coverage`` artifact (collected once, served as a one-row frame)."""
+    facts = coverage_report(_enriched(spark, sf_dir)).first().asDict()
+    return _round(fact_row(spark, facts, COVERAGE_COLUMNS), ["coverage_pct"])
 
 
 def q_grid_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -298,11 +301,10 @@ def q_latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_qa_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8/A10: single-row QA record, built exactly as the pipeline builds
     it (raw row count, the weekly mart's LAs and latest week, coverage)."""
-    enriched = _enriched(spark, sf_dir)
     qa = qa_metrics(
         load_transactions_raw(spark, sf_dir),
-        weekly_mart(enriched),
-        coverage_report(enriched),
+        _weekly(spark, sf_dir),
+        coverage_report(_enriched(spark, sf_dir)),
     )
     return _round(qa, ["coverage_pct"])
 

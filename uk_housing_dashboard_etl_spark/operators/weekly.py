@@ -191,13 +191,13 @@ def coverage_report(enriched: DataFrame) -> DataFrame:
 
     ``100 * count(la not null) / count(*)`` exactly as the reference
     (ref ``etl/etl_main.py:194-196``); one map-side-combinable aggregate.
+    With no rows (no parseable date) ``coverage_pct`` is NULL, as in the
+    oracle, rather than an ANSI division-by-zero error.
     """
     return enriched.agg(
         F.count(F.lit(1)).alias("total_tx"),
         F.count("local_authority").alias("mapped_tx"),
-        (
-            F.lit(100.0)
-            * F.count("local_authority")
-            / F.count(F.lit(1))
+        F.try_divide(
+            F.lit(100.0) * F.count("local_authority"), F.count(F.lit(1))
         ).alias("coverage_pct"),
     )

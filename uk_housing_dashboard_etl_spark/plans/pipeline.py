@@ -7,15 +7,21 @@ anomalies (W5) → latest snapshot (P10/A7) → QA (A8-A10) → CSV artifacts (S
 
 Like the reference, each mart is computed once; unlike it (eager,
 stage-by-stage ``df.copy()``), the stages are one lazy plan with four
-materialization points, each filled by the first action that reads it:
+materialization points:
 
 - ``enriched`` (cleaned + joined transactions), read by the weekly mart,
   the type breakdown and coverage;
 - the weekly mart, cached in ``run``, read three times by the grid (week
-  bounds, LAs, join), by its artifact and by QA;
+  bounds, LAs, join) and by its artifact;
+- the refresh facts (``snapshot.refresh_facts``), collected in ``run``
+  before any artifact is written: ``rows_raw`` from a count-only scan of
+  the raw input, coverage from ``coverage_report`` over ``enriched``
+  (filling that cache) and the LA count and latest week from the weekly
+  mart (filling that one). The ``coverage`` and ``qa`` artifacts are
+  one-row frames of these values;
 - the anomalies grid (densify → rolling → z-scores), of which ``windows``
-  is a projection and ``latest`` the max-week filter of that projection;
-- ``qa``, filled by its artifact write so the caller's collect reads it.
+  is a projection and ``latest`` that projection's rows of the collected
+  latest week.
 
 The ``weekly_by_la`` artifact keeps the reference's O1 row order
 (``local_authority``, ``week``; ref ``etl/etl_main.py:228``). The mart
@@ -38,14 +44,19 @@ from uk_housing_dashboard_etl_spark.operators import (
     densify_weekly_grid,
     detect_anomalies,
     enrich_with_lookup,
-    latest_snapshot,
-    qa_metrics,
     rolling_windows,
     standardize_transactions,
     type_breakdown,
     weekly_mart,
 )
 from uk_housing_dashboard_etl_spark.operators.rolling import OUTPUT_COLS as ROLLING_COLS
+from uk_housing_dashboard_etl_spark.operators.snapshot import (
+    COVERAGE_COLUMNS,
+    QA_COLUMNS,
+    fact_row,
+    refresh_facts,
+    week_rows,
+)
 from uk_housing_dashboard_etl_spark.sources.sinks import write_csv_artifact
 
 
@@ -78,7 +89,7 @@ class HousingPipeline:
     def run(self) -> dict[str, DataFrame]:
         cfg = self.config
         weekly = weekly_mart(self.enriched, approx=cfg.approx_percentiles).cache()
-        coverage = coverage_report(self.enriched)
+        facts = refresh_facts(self.raw, weekly, coverage_report(self.enriched))
         anomalies = detect_anomalies(
             rolling_windows(densify_weekly_grid(weekly), cfg.windows), cfg.z_thresh
         ).cache()
@@ -86,11 +97,11 @@ class HousingPipeline:
         outputs = {
             "weekly_by_la": weekly,
             "type_breakdown": type_breakdown(self.enriched),
-            "coverage": coverage,
+            "coverage": fact_row(self.spark, facts, COVERAGE_COLUMNS),
             "windows": windows_df,
             "anomalies": anomalies,
-            "latest": latest_snapshot(windows_df),
-            "qa": qa_metrics(self.raw, weekly, coverage).cache(),
+            "latest": week_rows(windows_df, facts["latest_week"]),
+            "qa": fact_row(self.spark, facts, QA_COLUMNS),
         }
         if cfg.artifacts_dir:
             artifacts = dict(
