@@ -23,7 +23,7 @@ from uk_housing_dashboard_etl_spark import contract  # noqa: E402
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return contract.q_weekly_by_la(spark, "/root/testdata/sf0.001")
+    return contract.QUERIES["weekly_by_la"](spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

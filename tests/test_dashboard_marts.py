@@ -1,7 +1,7 @@
-"""The registry's dashboard marts (weekly, windows, latest) are built once
-per session, sf_dir and input version: warm panels read them, and a table
-rewritten in place is never served from the marts built over its old
-rows."""
+"""The dashboard panels serve one ``HousingPipeline`` run, held once per
+session, sf_dir and input version: a warm panel reads the run's cached
+marts in one Spark job, and a table rewritten in place is never served
+from the marts built over its old rows."""
 
 from __future__ import annotations
 
@@ -12,10 +12,20 @@ from urllib.parse import urlparse
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from uk_housing_dashboard_etl_spark import contract
 
 STAR = ("events", "customer", "nation")
+PANELS = (
+    "weekly_by_la",
+    "type_breakdown",
+    "coverage_report",
+    "rolling_windows",
+    "anomalies",
+    "latest_snapshot",
+    "qa_metrics",
+)
 
 
 def _copy_star(sf_small: str, dst) -> str:
@@ -77,6 +87,27 @@ def test_warm_panel_reads_its_materialized_marts(spark, sf_small, tmp_path):
 
     spark.catalog.clearCache()
     assert not _oracle_problems(spark, sf, "latest_snapshot")
+
+
+@pytest.mark.parametrize("name", PANELS)
+def test_warm_panel_runs_one_spark_job(spark, sf_small, name):
+    panel = contract.QUERIES[name]
+    panel(spark, sf_small).collect()  # cold: runs the pipeline, fills its caches
+    assert _jobs(spark.sparkContext, lambda: panel(spark, sf_small).collect()) == 1
+
+
+def test_table_rewrite_releases_the_old_caches(spark, sf_small, tmp_path):
+    sf = _copy_star(sf_small, tmp_path)
+    rdds = spark.sparkContext._jsc.sc().getPersistentRDDs
+    panel = contract.QUERIES["latest_snapshot"]
+    panel(spark, sf).collect()  # fills enriched, weekly_by_la and anomalies
+    held = rdds().size()
+
+    events = os.path.join(sf, "events.parquet")
+    table = pq.read_table(events)
+    pq.write_table(table.slice(0, table.num_rows // 2), events)
+    panel(spark, sf).collect()
+    assert rdds().size() == held, "the run over the old rows is still cached"
 
 
 def test_cached_fit_large_refits_after_a_table_rewrite(spark, monkeypatch, tmp_path):

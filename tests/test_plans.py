@@ -5,9 +5,12 @@ rolling) must be visible in the optimized plans, not just intended.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from uk_housing_dashboard_etl_spark import contract
+from uk_housing_dashboard_etl_spark.plans.pipeline import PipelineConfig
 
 SF = "/root/testdata/sf0.001"
 
@@ -50,10 +53,23 @@ def test_semi_and_anti_join_strategies(spark):
 
 def test_rolling_windows_single_window_operator(spark):
     plan = plan_of(spark, "rolling_windows")
-    tree = plan.split("\n\n")[0]
+    tree, details = plan.split("\n\n", 1)
+    # the rolling sums are the Window nodes framed by a bounded RowFrame
+    # ending at the current row (the anomaly z-scores span the whole
+    # partition). An executed AQE plan is printed twice (final and
+    # initial plan) with the same node arguments: count distinct nodes.
+    rolling = set()
+    for block in details.split("\n\n"):
+        lines = block.strip().splitlines()
+        if lines and re.fullmatch(r"\(\d+\) Window", lines[0]):
+            args = next(ln for ln in lines if ln.startswith("Arguments: "))
+            if re.search(r"RowFrame, -\d+, currentrow", args):
+                rolling.add(args)
     # all window lengths in ONE Window node; fan-out is a Generate
-    window_nodes = [ln for ln in tree.splitlines() if "+- Window" in ln or ": Window" in ln]
-    assert len(window_nodes) == 1, tree
+    assert len(rolling) == 1, tree
+    (args,) = rolling
+    for n in PipelineConfig().windows:
+        assert f"RowFrame, -{n - 1}, currentrow" in args, n
     assert "Generate" in tree
     # the weekly mart is computed once and reused from cache
     assert "InMemoryRelation" in tree

@@ -113,10 +113,14 @@ def test_normalize_code_idempotent_and_spaceless(spark, s):
 
 def test_approx_percentile_mode_close_to_exact(spark, sf_med):
     from uk_housing_dashboard_etl_spark.contract import (
-        _enriched,
+        load_lookup,
+        load_transactions_raw,
     )
 
-    enriched = _enriched(spark, sf_med)
+    enriched = enrich_with_lookup(
+        standardize_transactions(load_transactions_raw(spark, sf_med)),
+        load_lookup(spark, sf_med),
+    )
     exact = weekly_mart(enriched).toPandas().set_index(["week", "local_authority"])
     approx = (
         weekly_mart(enriched, approx=True)

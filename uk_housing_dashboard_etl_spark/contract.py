@@ -26,18 +26,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from uk_housing_dashboard_etl_spark.operators import (
-    coverage_report,
     densify_weekly_grid,
-    detect_anomalies,
-    enrich_with_lookup,
-    latest_snapshot,
-    qa_metrics,
-    rolling_windows,
     standardize_transactions,
-    type_breakdown,
-    weekly_mart,
 )
-from uk_housing_dashboard_etl_spark.operators.snapshot import COVERAGE_COLUMNS, fact_row
 from uk_housing_dashboard_etl_spark.operators.relational import (
     brand_revenue,
     customers_without_orders,
@@ -89,12 +80,12 @@ from uk_housing_dashboard_etl_spark.functions.rounding import (
     round4,
     round4_sql,
 )
+from uk_housing_dashboard_etl_spark.plans import HousingPipeline
 from uk_housing_dashboard_etl_spark.sources.readers import read_table
 
 ROUND_DP = 4
-WINDOWS = [4, 12]
 
-# extra bench-suite members appended as they land (bench.py reads this)
+
 def _round(df: DataFrame, cols: list[str]) -> DataFrame:
     out = df
     for c in cols:
@@ -122,7 +113,6 @@ def _rewrite_round4(sql: str) -> str:
             elif ch == "," and depth == 1:
                 top_comma = j
             j += 1
-        inner = sql[i + len("round(") : j - 1]
         if top_comma != -1 and sql[top_comma + 1 : j - 1].strip() == "4":
             expr = sql[i + len("round(") : top_comma]
             replacement = round4_sql(_rewrite_round4(expr))
@@ -131,7 +121,6 @@ def _rewrite_round4(sql: str) -> str:
             i = lower.find("round(", i + len(replacement))
         else:
             # not a 4dp round (or no scale) — leave it, continue past
-            del inner
             i = lower.find("round(", i + len("round("))
     return sql
 
@@ -165,14 +154,12 @@ def load_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tx = standardize_transactions(load_transactions_raw(spark, sf_dir))
-    return enrich_with_lookup(tx, load_lookup(spark, sf_dir))
-
-
 # Dashboard marts held per (session, absolute sf_dir): the input version
-# they were built from, and the cached frames by name.
+# they were built from, and one HousingPipeline run's outputs plus its
+# ``enriched`` frame, by name.
 _MARTS: dict[tuple[SparkSession, str], tuple[tuple, dict[str, DataFrame]]] = {}
+# the frames of a run that HousingPipeline caches
+_CACHED = ("weekly_by_la", "anomalies", "enriched")
 
 
 def _input_version(sf_dir: str) -> tuple:
@@ -192,45 +179,37 @@ def _input_version(sf_dir: str) -> tuple:
     return tuple(version)
 
 
-def _mart(
-    spark: SparkSession, sf_dir: str, name: str, build: Callable[[], DataFrame]
-) -> DataFrame:
-    """``build()``, cached once per session, absolute ``sf_dir`` and input
-    version, so successive panels read the mart instead of rebuilding it
-    from the star tables.
+def _mart(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """The outputs of one ``HousingPipeline`` run over ``sf_dir``'s star
+    tables, by name, plus its cached ``enriched`` frame: held once per
+    session, absolute ``sf_dir`` and input version, so successive panels
+    read the refresh's marts instead of rebuilding them.
 
-    A new input version unpersists the marts built over the old files and
-    refreshes every Spark cache entry over the tables: Spark matches a
-    cache by plan and path, not by file contents, and would otherwise
-    serve the old rows. A mart that is held but no longer cached (after
-    ``spark.catalog.clearCache()``) is rebuilt."""
+    A new input version unpersists the held run's caches and refreshes
+    every Spark cache entry over the tables: Spark matches a cache by plan
+    and path, not by file contents, and would otherwise serve the old
+    rows. A held run whose caches are gone (after
+    ``spark.catalog.clearCache()``) is run again."""
     root = os.path.abspath(sf_dir)
     version = _input_version(root)
     held = _MARTS.get((spark, root))
-    if held is None or held[0] != version:
-        if held is not None:
-            for df in held[1].values():
-                df.unpersist()
+    if held is not None:
+        held_version, marts = held
+        if held_version == version and all(
+            marts[n].storageLevel.useMemory for n in _CACHED
+        ):
+            return marts
+        for n in _CACHED:
+            marts[n].unpersist()
+        if held_version != version:
             for table in glob.glob(os.path.join(root, "*.parquet")):
                 spark.catalog.refreshByPath(table)
-        held = _MARTS[(spark, root)] = (version, {})
-    marts = held[1]
-    if name not in marts or not marts[name].storageLevel.useMemory:
-        marts[name] = build().cache()
-    return marts[name]
-
-
-def _weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _mart(spark, sf_dir, "weekly", lambda: weekly_mart(_enriched(spark, sf_dir)))
-
-
-def _windows_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _mart(
-        spark,
-        sf_dir,
-        "windows",
-        lambda: rolling_windows(densify_weekly_grid(_weekly(spark, sf_dir)), WINDOWS),
+    pipeline = HousingPipeline(
+        spark, load_transactions_raw(spark, root), load_lookup(spark, root)
     )
+    marts = dict(pipeline.run(), enriched=pipeline.enriched)
+    _MARTS[(spark, root)] = (version, marts)
+    return marts
 
 
 # ------------------------------------------------------- spark queries
@@ -244,26 +223,20 @@ def q_clean_transactions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return standardize_transactions(load_transactions_raw(spark, sf_dir))
 
 
-def q_weekly_by_la(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1 + W1 + A1-A4: the reference's flagship weekly mart."""
-    return _round(_weekly(spark, sf_dir), WEEKLY_ROUND)
+def _panel(output: str, cols: list[str]) -> Callable[[SparkSession, str], DataFrame]:
+    """A dashboard panel: the held pipeline run's ``output`` with ``cols``
+    rounded, and nothing else computed on top of it."""
 
+    def panel(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return _round(_mart(spark, sf_dir)[output], cols)
 
-def q_type_breakdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5 + P9: count(*) per (week, LA, normalized type)."""
-    return type_breakdown(_enriched(spark, sf_dir))
-
-
-def q_coverage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A9/A10: lookup-coverage QA row, built as the pipeline builds its
-    ``coverage`` artifact (collected once, served as a one-row frame)."""
-    facts = coverage_report(_enriched(spark, sf_dir)).first().asDict()
-    return _round(fact_row(spark, facts, COVERAGE_COLUMNS), ["coverage_pct"])
+    return panel
 
 
 def q_grid_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2: densified weeks × LAs grid with zero-filled transactions."""
-    return _round(densify_weekly_grid(_weekly(spark, sf_dir)), WEEKLY_ROUND)
+    weekly = _mart(spark, sf_dir)["weekly_by_la"]
+    return _round(densify_weekly_grid(weekly), WEEKLY_ROUND)
 
 
 def q_gap_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,39 +247,7 @@ def q_gap_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
         interpolate_gaps,
     )
 
-    return interpolate_gaps(densify_weekly_grid(_weekly(spark, sf_dir)))
-
-
-def q_rolling_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W2-W4: per-LA rolling sum/mean, fanned out per window length."""
-    return _round(_windows_df(spark, sf_dir), WINDOW_ROUND)
-
-
-def q_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W5/A6: pooled per-LA z-scores + boolean anomaly flags."""
-    return _round(
-        detect_anomalies(_windows_df(spark, sf_dir)),
-        WINDOW_ROUND + ["z_transactions", "z_rolling_trans"],
-    )
-
-
-def q_latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P10/A7: rows of the globally-latest week."""
-    latest = _mart(
-        spark, sf_dir, "latest", lambda: latest_snapshot(_windows_df(spark, sf_dir))
-    )
-    return _round(latest, WINDOW_ROUND)
-
-
-def q_qa_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A8/A10: single-row QA record, built exactly as the pipeline builds
-    it (raw row count, the weekly mart's LAs and latest week, coverage)."""
-    qa = qa_metrics(
-        load_transactions_raw(spark, sf_dir),
-        _weekly(spark, sf_dir),
-        coverage_report(_enriched(spark, sf_dir)),
-    )
-    return _round(qa, ["coverage_pct"])
+    return interpolate_gaps(densify_weekly_grid(_mart(spark, sf_dir)["weekly_by_la"]))
 
 
 def q_week_over_week(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -314,7 +255,7 @@ def q_week_over_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     YOY operator, as WoW on the dense grid; YOY = periods=52)."""
     from uk_housing_dashboard_etl_spark.operators.timeseries import period_over_period
 
-    dense = densify_weekly_grid(_weekly(spark, sf_dir))
+    dense = densify_weekly_grid(_mart(spark, sf_dir)["weekly_by_la"])
     # round the float base BEFORE differencing: deltas of 4dp values never
     # land on a rounding boundary, so both engines agree bit-for-bit
     dense = dense.withColumn("price_mean", round4(F.col("price_mean")))
@@ -1849,7 +1790,7 @@ def q_weekly_approx_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     pX must lie between the exact p(X−5) and p(X+5). Exact percentiles
     are emitted for the oracle's value-hash; the rank-window flags must
     all read TRUE."""
-    enriched = _enriched(spark, sf_dir)
+    enriched = _mart(spark, sf_dir)["enriched"]
     base = (
         enriched.where(F.col("local_authority").isNotNull())
         .withColumn("week", F.date_trunc("week", F.col("date")))
@@ -2095,7 +2036,7 @@ def q_price_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     total order), rolled to per-(LA, decile) count + mean price."""
     from uk_housing_dashboard_etl_spark.operators.relational import price_deciles
 
-    return price_deciles(_enriched(spark, sf_dir))
+    return price_deciles(_mart(spark, sf_dir)["enriched"])
 
 
 def q_lapsed_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2116,7 +2057,9 @@ def q_robust_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uk_housing_dashboard_etl_spark.operators.anomaly import robust_anomalies
 
     return robust_anomalies(
-        _weekly(spark, sf_dir).select("week", "local_authority", "transactions")
+        _mart(spark, sf_dir)["weekly_by_la"].select(
+            "week", "local_authority", "transactions"
+        )
     )
 
 
@@ -2142,7 +2085,7 @@ def q_modal_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         modal_type_per_la,
     )
 
-    return modal_type_per_la(_enriched(spark, sf_dir))
+    return modal_type_per_la(_mart(spark, sf_dir)["enriched"])
 
 
 def q_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4451,7 +4394,7 @@ def q_range_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     densification needed — the frame is on the time axis)."""
     from uk_housing_dashboard_etl_spark.operators.timeseries import rolling_time_range
 
-    return rolling_time_range(_weekly(spark, sf_dir), days=28)
+    return rolling_time_range(_mart(spark, sf_dir)["weekly_by_la"], days=28)
 
 
 def q_active_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6013,7 +5956,9 @@ def q_ewma_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uk_housing_dashboard_etl_spark.operators.timeseries import ewma_smooth
 
     return ewma_smooth(
-        _weekly(spark, sf_dir).select("week", "local_authority", "transactions")
+        _mart(spark, sf_dir)["weekly_by_la"].select(
+            "week", "local_authority", "transactions"
+        )
     )
 
 
@@ -6532,7 +6477,9 @@ def q_cusum_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return cusum_changepoints(
-        _weekly(spark, sf_dir).select("week", "local_authority", "transactions"),
+        _mart(spark, sf_dir)["weekly_by_la"].select(
+            "week", "local_authority", "transactions"
+        ),
         threshold=5.0,
     )
 
@@ -6665,7 +6612,9 @@ def q_theil_sen_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uk_housing_dashboard_etl_spark.operators.stats import theil_sen_slope
 
     return theil_sen_slope(
-        _weekly(spark, sf_dir).select("week", "local_authority", "transactions")
+        _mart(spark, sf_dir)["weekly_by_la"].select(
+            "week", "local_authority", "transactions"
+        )
     )
 
 
@@ -6694,7 +6643,9 @@ def q_holt_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uk_housing_dashboard_etl_spark.operators.timeseries import holt_linear
 
     return holt_linear(
-        _weekly(spark, sf_dir).select("week", "local_authority", "transactions")
+        _mart(spark, sf_dir)["weekly_by_la"].select(
+            "week", "local_authority", "transactions"
+        )
     )
 
 
@@ -8857,14 +8808,17 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "streaming_attribution": q_streaming_attribution,
     # --- §2 core re-confirm (green in CORRECTNESS_r01.json) ---
     "clean_transactions": q_clean_transactions,
-    "weekly_by_la": q_weekly_by_la,
-    "rolling_windows": q_rolling_windows,
-    "anomalies": q_anomalies,
-    "latest_snapshot": q_latest_snapshot,
-    "type_breakdown": q_type_breakdown,
-    "coverage_report": q_coverage_report,
+    # the seven dashboard panels, each a rounded HousingPipeline output
+    "weekly_by_la": _panel("weekly_by_la", WEEKLY_ROUND),  # J1 + W1 + A1-A4
+    "rolling_windows": _panel("windows", WINDOW_ROUND),  # W2-W4
+    "anomalies": _panel(  # W5/A6: pooled per-LA z-scores + anomaly flags
+        "anomalies", WINDOW_ROUND + ["z_transactions", "z_rolling_trans"]
+    ),
+    "latest_snapshot": _panel("latest", WINDOW_ROUND),  # P10/A7
+    "type_breakdown": _panel("type_breakdown", []),  # A5 + P9
+    "coverage_report": _panel("coverage", ["coverage_pct"]),  # A9/A10
     "grid_weekly": q_grid_weekly,
-    "qa_metrics": q_qa_metrics,
+    "qa_metrics": _panel("qa", ["coverage_pct"]),  # A8/A10
     "week_over_week": q_week_over_week,
     "props_json": q_props_json,
     "rollup_lineitem": q_rollup_lineitem,

@@ -26,10 +26,11 @@ def densify_weekly_grid(weekly: DataFrame) -> DataFrame:
 
     The input mart feeds THREE consumers here (bounds aggregate, distinct
     LAs, join probe side). The caller owns its materialization: pass a
-    cached mart (``HousingPipeline.run`` and the registry's ``_weekly``
-    do), or the fact-table subtree that produced it runs once per
-    consumer. A cache taken here could not be released by anyone and
-    would outlive a rewrite of the files it was read from.
+    cached mart (``HousingPipeline.run`` does, and the registry's grid
+    queries pass the weekly mart of the run it holds), or the fact-table
+    subtree that produced it runs once per consumer. A cache taken here
+    could not be released by anyone and would outlive a rewrite of the
+    files it was read from.
     """
     bounds = weekly.agg(
         F.min("week").alias("__wmin"), F.max("week").alias("__wmax")

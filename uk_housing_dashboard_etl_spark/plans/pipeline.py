@@ -30,6 +30,9 @@ partition, with no range-partition sample job and no exchange.
 
 A failed artifact write fails the run: a refresh never reports success
 with a partial artifact set.
+
+The dashboard registry (``contract._mart``) serves these outputs: it
+holds one run per input version, and its panels read them by name.
 """
 
 from __future__ import annotations
