@@ -5,6 +5,8 @@ from __future__ import annotations
 import os
 import time
 
+import pytest
+
 from uk_housing_dashboard_etl_spark.sources.ingest import download_to_landing
 
 
@@ -49,3 +51,32 @@ def test_backup_snapshot_written(tmp_path):
     backups = os.listdir(bdir)
     assert len(backups) == 1 and backups[0].startswith("landing-")
     assert open(os.path.join(bdir, backups[0])).read() == "payload-1"
+
+
+def test_failed_fetch_is_never_served_from_cache(tmp_path):
+    calls = []
+
+    def broken(url, dest):
+        calls.append(url)
+        with open(dest, "w") as f:
+            f.write("half-a-fi")
+        raise ConnectionError("connection reset mid-download")
+
+    cache = str(tmp_path / "pp.txt")
+    with pytest.raises(ConnectionError):
+        download_to_landing("http://x/pp.txt", cache, fetcher=broken)
+    # the next call within the TTL fetches again instead of serving the
+    # partial file
+    download_to_landing("http://x/pp.txt", cache, fetcher=make_fetcher(calls))
+    assert len(calls) == 2
+    assert open(cache).read() == "payload-2"
+
+    # a broken forced refetch keeps the good cache, and leaves no backup
+    # or temp file behind
+    bdir = str(tmp_path / "backups")
+    with pytest.raises(ConnectionError):
+        download_to_landing(
+            "http://x/pp.txt", cache, force=True, backup_dir=bdir, fetcher=broken
+        )
+    assert open(cache).read() == "payload-2"
+    assert sorted(os.listdir(tmp_path)) == ["pp.txt"]

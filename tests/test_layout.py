@@ -78,56 +78,6 @@ def test_zorder_value_bit_interleave(spark):
     assert out[(0, 0)] == 0
 
 
-def test_write_zordered_files_cover_disjoint_z_ranges(spark, tmp_path):
-    from uk_housing_dashboard_etl_spark.sources.layout import (
-        write_zordered,
-        zorder_value,
-    )
-
-    # deterministic pseudo-random grid points
-    df = spark.range(1000).select(
-        (F.xxhash64("id") % 256).alias("x"),
-        (F.xxhash64("id", F.lit(1)) % 256).alias("y"),
-    ).select(F.abs("x").alias("x"), F.abs("y").alias("y"))
-    path = str(tmp_path / "zordered")
-    write_zordered(df, path, "x", "y", n_files=4)
-
-    import glob
-
-    files = sorted(glob.glob(path + "/part-*.parquet"))
-    assert len(files) >= 2  # range partitioner used several files
-    ranges = []
-    for f in files:
-        part = spark.read.parquet(f).select(
-            zorder_value(F.col("x"), F.col("y")).alias("z")
-        )
-        mm = part.agg(F.min("z"), F.max("z")).first()
-        if mm[0] is not None:
-            ranges.append((mm[0], mm[1]))
-    ranges.sort()
-    for (lo1, hi1), (lo2, _hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2, "file z-ranges overlap: range partitioning broken"
-
-
-def test_compact_small_files_merges_and_preserves_rows(spark, tmp_path):
-    import glob
-
-    from uk_housing_dashboard_etl_spark.sources.layout import (
-        compact_small_files,
-    )
-
-    path = str(tmp_path / "frag")
-    # many tiny files (AQE may coalesce some of the 40 partitions)
-    spark.range(40).repartition(40).write.parquet(path)
-    assert len(glob.glob(path + "/part-*.parquet")) > 5
-    before = {r.id for r in spark.read.parquet(path).collect()}
-
-    n = compact_small_files(spark, path, target_mb=128)
-    files = glob.glob(path + "/part-*.parquet")
-    assert n == 1 and len(files) == 1
-    assert {r.id for r in spark.read.parquet(path).collect()} == before
-
-
 def test_partitioned_write_prunes_partitions_on_read(spark, tmp_path):
     """Hive-style partitioned layout must turn an equality filter into
     PARTITION pruning (directory skip), not a data filter: the scan's

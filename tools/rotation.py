@@ -3,8 +3,7 @@ execution): which repo units a function reaches, transitively.
 
 ``contract._fit_code_salt`` hashes the traced closure of each on-disk
 fit kind's roots, so a cached fit artifact is rebuilt the moment any
-code it executes changes, and ``bench.fit_family_totals`` uses the same
-closures to attribute fit kinds to the queries that consume them.
+code it executes changes.
 ``rows_only_twins`` is registry hygiene: every rows-only query must
 have an oracle-gated twin.
 

@@ -19,7 +19,6 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -8088,29 +8087,21 @@ _EXTENSION_ORACLES["streaming_joined_outer"] = """
 # rows (schema + collect of the ≤ m·k-row fit frame), not live
 # DataFrames: a pinned localCheckpoint would hold executor blocks for
 # the whole process lifetime (round-5 advice — cross-application
-# entries were never evicted) and would break under the bench harness's
-# between-query cache release. Rebuilding via ``createDataFrame`` from
-# a few hundred local rows is negligible next to the fit it avoids, and
-# is valid across sessions (the rows are plain data). Entries are keyed
-# by ``sf_dir``'s input version too, so a table rewritten in place is
-# refitted instead of served the old fit; the dict is bounded by
-# |sf_dirs| × |fit kinds| × |input versions seen|.
+# entries were never evicted) and would not survive a ``clearCache()``.
+# Rebuilding via ``createDataFrame`` from a few hundred local rows is
+# negligible next to the fit it avoids, and is valid across sessions
+# (the rows are plain data). Entries are keyed by ``sf_dir``'s input
+# version too, so a table rewritten in place is refitted instead of
+# served the old fit; the dict is bounded by |sf_dirs| × |fit kinds| ×
+# |input versions seen|.
 _FIT_CACHE: dict[tuple, tuple] = {}
-
-# wall-clock seconds each fit kind cost when it actually ran (cache
-# misses only) — bench.py publishes this as the fit/search split for
-# the ANN family (round-6 advice: PQ regressions were only diagnosable
-# by reading code), keyed (sf_dir, kind)
-FIT_TIMES: dict[tuple, float] = {}
 
 
 def _cached_fit(spark: SparkSession, sf_dir: str, kind: str, builder):
     key = (sf_dir, kind, _input_version(os.path.abspath(sf_dir)))
     if key not in _FIT_CACHE:
-        t0 = time.time()
         fitted = builder()
         _FIT_CACHE[key] = (fitted.schema, fitted.collect())
-        FIT_TIMES[(sf_dir, kind)] = round(time.time() - t0, 3)
     schema, rows = _FIT_CACHE[key]
     return spark.createDataFrame(rows, schema)
 
@@ -8232,9 +8223,9 @@ def _cached_fit_large(spark: SparkSession, sf_dir: str, kind: str, builder):
     the process lifetime and pays a driver→executor serialization on
     every reuse — at a 100 TB corpus that is a driver OOM. Write-once
     parquet keeps the artifact executor-side, costs one scan to reuse,
-    survives the bench harness's between-query cache release, and is
-    the same artifact-reuse pattern a production index build ships
-    (encode once, every probe job reads the codes table). The path is
+    survives a ``clearCache()`` and process restarts, and is the same
+    artifact-reuse pattern a production index build ships (encode
+    once, every probe job reads the codes table). The path is
     salted with the traced-closure hash of the fitting code
     (``_fit_code_salt``) and with ``sf_dir``'s input version
     (``_input_version``), so stale artifacts can never outlive a change
@@ -8244,11 +8235,9 @@ def _cached_fit_large(spark: SparkSession, sf_dir: str, kind: str, builder):
     fit never leaves a readable half-artifact, and the tmp dir is
     cleaned in a ``finally`` so a failed builder can't leak it. A lost
     rename race (another process published the same artifact first)
-    still records this process's FIT_TIMES — the fit time WAS paid here
-    and bench attributes per-process cost, not per-artifact cost."""
+    serves the winner's artifact."""
     import hashlib
 
-    key = (sf_dir, kind)
     root = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "spark-warehouse",
@@ -8262,7 +8251,6 @@ def _cached_fit_large(spark: SparkSession, sf_dir: str, kind: str, builder):
     ).hexdigest()[:12]
     path = os.path.join(root, f"{digest}_{kind}")
     if not os.path.isdir(path):
-        t0 = time.time()
         tmp = f"{path}.tmp{os.getpid()}"
         try:
             builder().write.mode("overwrite").parquet(tmp)
@@ -8273,15 +8261,13 @@ def _cached_fit_large(spark: SparkSession, sf_dir: str, kind: str, builder):
                     raise
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
-        FIT_TIMES[key] = round(time.time() - t0, 3)
     return spark.read.parquet(path)
 
 
 def clear_large_fit_cache() -> None:
-    """Drop the on-disk fit artifacts. bench.py calls this at suite
-    start so every benched run pays each fit exactly once (the same
-    fit-once-per-suite semantics the in-process cache gives), keeping
-    round-over-round ANN timings comparable instead of silently warm."""
+    """Drop every on-disk fit artifact, superseded ones included: each
+    code or input change leaves its old artifacts behind, so sweep the
+    cache by hand to reclaim the space. The next reader refits."""
     root = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "spark-warehouse",

@@ -29,7 +29,24 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# Session SQL confs that change what a query returns, not how fast it
+# runs. ``get_spark`` builds with them and ``sources.readers.read_table``
+# sets them again on the session it is handed, which may have been built
+# elsewhere.
+SEMANTIC_CONF = {
+    # testdata parquet carries TIMESTAMP(NANOS), which the vectorized
+    # reader rejects: read it as long nanoseconds and let read_table
+    # convert to micros (the same truncation DuckDB applies)
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # week bucketing and collected timestamps are host-independent and
+    # match the DuckDB oracle's naive-timestamp semantics
+    "spark.sql.session.timeZone": "UTC",
+    # pyarrow writes timestamp[us] with no tz, which Spark 3.5+ infers as
+    # TIMESTAMP_NTZ, and unix_micros()/interval arithmetic reject that.
+    # Read it as plain TIMESTAMP: with the UTC session tz these are the
+    # same instants as the oracle's naive timestamps.
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+}
 
 
 def default_driver_memory() -> str:
@@ -65,23 +82,14 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
-        # stderr progress bars interleave with harness output (selfcheck/
-        # bench pipe through shells) and garble per-query log lines
+        # stderr progress bars interleave with tool output (selfcheck
+        # pipes through shells) and garble per-query log lines
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", "1000")
-        # testdata parquet carries TIMESTAMP(NANOS); read as long and let
-        # the reader convert to micros (matches DuckDB's truncation)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # pyarrow writes timestamp[us] with no tz → Spark 3.5+ infers
-        # TIMESTAMP_NTZ, which breaks unix_micros()/interval arithmetic.
-        # Read as plain TIMESTAMP; with the UTC session tz this matches the
-        # DuckDB oracle's naive-timestamp semantics bit-for-bit.
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**SEMANTIC_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -60,7 +60,10 @@ def download_to_landing(
     (mtime younger than ``ttl_hours``); optionally keep a timestamped
     backup. Returns the path for ``spark.read`` to scan.
 
-    ``fetcher(url, dest)`` is injectable for tests/offline use.
+    ``fetcher(url, dest)`` is injectable for tests/offline use. It writes
+    a sibling temp file that replaces ``cache_file`` only once the fetcher
+    returns: a failed fetch raises and leaves the previous cache, if any,
+    as it was, so a half-written download is never served as fresh.
     """
     os.makedirs(os.path.dirname(cache_file) or ".", exist_ok=True)
     if os.path.exists(cache_file) and not force:
@@ -68,7 +71,13 @@ def download_to_landing(
         if age_h < ttl_hours:
             logger.info("using cached %s (age %.1fh)", cache_file, age_h)
             return cache_file
-    (fetcher or _default_fetcher)(url, cache_file)
+    tmp = f"{cache_file}.part{os.getpid()}"
+    try:
+        (fetcher or _default_fetcher)(url, tmp)
+        os.replace(tmp, cache_file)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
     logger.info("downloaded %s -> %s", url, cache_file)
     if backup_dir:
         os.makedirs(backup_dir, exist_ok=True)

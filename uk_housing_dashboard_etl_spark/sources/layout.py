@@ -76,69 +76,3 @@ def zorder_sql(x: str, y: str, bits: int = 16) -> str:
         terms.append(f"((({x} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({y} >> {i}) & 1) << {2 * i + 1})")
     return " | ".join(terms)
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    x_col: str,
-    y_col: str,
-    n_files: int,
-    bits: int = 16,
-) -> None:
-    """Write ``df`` as ``n_files`` parquet files range-partitioned and
-    sorted by the z-order key of (x_col, y_col), so every file covers a
-    compact z-range and its min/max footer stats prune 2-D predicates.
-    """
-    from pyspark.sql import functions as F
-
-    z = zorder_value(F.col(x_col), F.col(y_col), bits)
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def compact_small_files(
-    spark: SparkSession,
-    path: str,
-    target_mb: int = 128,
-) -> int:
-    """Merge a parquet directory's accumulated small files into
-    ~``target_mb`` outputs and atomically swap the directory — the
-    maintenance pass every incremental/streaming writer needs, because
-    per-batch appends converge on thousands of KB-scale files whose
-    open/footer overhead dominates scan time at 100 TB.
-
-    Output file count = ceil(total_bytes / target); the rewrite is one
-    scan + one round-robin repartition (no shuffle key — pure size
-    balancing). The swap is write-to-sibling + rename: crash-safe up to
-    the final rename pair on a real filesystem; production tables do
-    this under a table format's (Iceberg/Delta) commit protocol
-    instead, which is exactly the slot this function occupies.
-
-    Returns the number of files written.
-    """
-    import math
-    import os
-    import shutil
-
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith((".", "_")):
-                total += os.path.getsize(os.path.join(root, f))
-    n_out = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    tmp = path.rstrip("/") + ".__compact_tmp"
-    old = path.rstrip("/") + ".__compact_old"
-    spark.read.parquet(path).repartition(n_out).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return n_out

@@ -17,6 +17,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from uk_housing_dashboard_etl_spark.session import SEMANTIC_CONF
+
 SNIFF_SEPARATORS = [",", "\t", "|"]
 SNIFF_BYTES = 64 * 1024
 
@@ -32,15 +34,8 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:  # session-level SQLConfs — safe to set on externally-built sessions
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # week bucketing / collected timestamps must be tz-independent and
-        # match the DuckDB oracle's naive-timestamp semantics
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        # pyarrow writes timestamp[us] with no tz; Spark 3.5+ would infer
-        # TIMESTAMP_NTZ, which unix_micros()/ts arithmetic reject. Read as
-        # plain TIMESTAMP (session tz = UTC above → same instants as the
-        # DuckDB oracle's naive timestamps).
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        for k, v in SEMANTIC_CONF.items():
+            spark.conf.set(k, v)
     except Exception:
         pass
     df = spark.read.parquet(path)
