@@ -33,6 +33,26 @@ def test_module_units_and_normalization():
     assert a.units["X"] != c.units["X"]
 
 
+def test_docstring_edits_keep_the_unit_source():
+    src = (
+        "class C:\n"
+        "    '''{doc}'''\n"
+        "    def m(self):\n"
+        "        '''{doc}'''\n"
+        "def f(y):\n"
+        "    '''{doc}'''\n"
+        "    return y + {k}\n"
+    )
+    a = _mod("m", src.format(doc="Old text.", k=1))
+    b = _mod("m", src.format(doc="New, reflowed\n    text.", k=1))
+    # a docstring-only edit (function, class, method) is not a change
+    assert a.units["f"] == b.units["f"]
+    assert a.units["C"] == b.units["C"]
+    # a one-token code edit still is
+    c = _mod("m", src.format(doc="Old text.", k=2))
+    assert a.units["f"] != c.units["f"]
+
+
 def test_relative_import_resolution():
     info = _mod(
         "operators.demo",

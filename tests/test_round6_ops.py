@@ -289,7 +289,6 @@ def test_pca_recovers_planted_direction(spark):
     from uk_housing_dashboard_etl_spark.operators.pca import (
         pca_fit,
         pca_project,
-        pca_variance_check,
     )
 
     # points spread along (0.6, 0.8) with a small orthogonal wiggle
@@ -300,7 +299,8 @@ def test_pca_recovers_planted_direction(spark):
         for i, (t, w) in enumerate(zip(rng, wig))
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    comps = pca_fit(emb, n_components=2).collect()
+    fitted = pca_fit(emb, n_components=2)
+    comps = fitted.collect()
     v1 = np.array(comps[0]["vector"])
     assert abs(abs(float(np.dot(v1, [0.6, 0.8]))) - 1.0) < 1e-3
     assert comps[0]["eigenvalue"] > comps[1]["eigenvalue"]
@@ -308,10 +308,15 @@ def test_pca_recovers_planted_direction(spark):
     for c in comps:
         v = np.array(c["vector"])
         assert v[int(np.argmax(np.abs(v)))] > 0
-    checks = pca_variance_check(emb, n_components=2).collect()
-    assert all(r["ok"] for r in checks)
+    # the spectral contract: each component's population score variance
+    # is its eigenvalue within 5 %, and the eigenvalues do not increase
+    scores = pca_project(emb, fitted).collect()
+    lam = [c["eigenvalue"] for c in comps]
+    assert lam == sorted(lam, reverse=True)
+    for c in comps:
+        s = np.array([r["score"] for r in scores if r["component"] == c["component"]])
+        assert abs(s.var() - c["eigenvalue"]) <= 0.05 * max(c["eigenvalue"], 1e-12)
     # projection centers on the mean: scores of comp1 average ~0
-    scores = pca_project(emb, pca_fit(emb, 2)).collect()
     s1 = [r["score"] for r in scores if r["component"] == 1]
     assert abs(sum(s1) / len(s1)) < 1e-2
 

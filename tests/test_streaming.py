@@ -306,69 +306,6 @@ def test_streaming_anomaly_drain_equals_batch_companion(spark, tmp_path):
     assert drained[3].n_seen == 3 and drained[4].n_seen == 4
 
 
-def test_session_stream_append_and_checkpoint_recovery(spark, tmp_path):
-    from uk_housing_dashboard_etl_spark.operators.sessionize import session_stats
-    from uk_housing_dashboard_etl_spark.streaming import (
-        run_stream_to_parquet,
-        session_stream,
-    )
-
-    d = str(tmp_path / "landing")
-    out = str(tmp_path / "sessions_out")
-    ckpt = str(tmp_path / "ckpt")
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    m = dt.timedelta(minutes=1)
-    # user 1: one session split across two files (10-min gaps), then a
-    # second session 2 hours later; user 2: a single event
-    batch1 = [
-        (1, t0, 1, "a", 10.0, ""),
-        (2, t0 + 10 * m, 1, "a", 20.0, ""),
-        (3, t0, 2, "b", 5.0, ""),
-    ]
-    batch2 = [
-        (4, t0 + 20 * m, 1, "a", 30.0, ""),
-        (5, t0 + 140 * m, 1, "a", 40.0, ""),
-    ]
-    _events(spark, batch1).write.mode("append").parquet(d)
-    _events(spark, batch2).write.mode("append").parquet(d)
-
-    # run 1: sessions are still open (watermark has not passed their
-    # ends) — append emits nothing, state persists in the checkpoint
-    run_stream_to_parquet(session_stream(spark, d, gap_minutes=30.0), out, ckpt)
-    assert spark.read.parquet(out).count() == 0
-
-    # a later event pushes the watermark past every open session's end
-    sentinel = [(99, t0 + dt.timedelta(days=3), 9, "z", 0.0, "")]
-    _events(spark, sentinel).write.mode("append").parquet(d)
-
-    # run 2: same checkpoint — session state recovers; the sentinel's
-    # batch advances the watermark and the trailing no-data batch evicts
-    # (emits) every closed session within the same drain
-    run_stream_to_parquet(session_stream(spark, d, gap_minutes=30.0), out, ckpt)
-    rows = {
-        (r["user_id"], r["session_start"]): r
-        for r in spark.read.parquet(out).collect()
-    }
-    # one merged session for user 1 despite the file split
-    s1 = rows[(1, t0)]
-    assert s1["n_events"] == 3 and s1["value_sum"] == 60.0
-    assert s1["session_last"] == t0 + 20 * m
-    # the late-gap event opens its own session
-    s2 = rows[(1, t0 + 140 * m)]
-    assert s2["n_events"] == 1 and s2["value_sum"] == 40.0
-    assert rows[(2, t0)]["n_events"] == 1
-
-    # session membership equals the batch lag/cumsum sessionizer
-    batch = session_stats(
-        _events(spark, batch1 + batch2), timeout_minutes=30.0
-    )
-    got = {
-        (r["user_id"], r["session_start"]): r["n_events"] for r in batch.collect()
-    }
-    want = {k: v["n_events"] for k, v in rows.items() if k[0] != 9}
-    assert got == want
-
-
 def test_funnel_stream_state_across_batches_matches_batch_fold(spark, tmp_path):
     from uk_housing_dashboard_etl_spark.operators.funnel import funnel_steps
     from uk_housing_dashboard_etl_spark.streaming import funnel_stream

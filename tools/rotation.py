@@ -11,8 +11,9 @@ How the trace works:
 
 - every package module in the working tree is parsed; top-level
   functions, classes, and constant assignments become *units* keyed
-  ``(module, qualname)`` with a normalized (``ast.unparse``) source —
-  comment/formatting edits do not change it;
+  ``(module, qualname)`` with a normalized source: ``ast.unparse`` of
+  the node with every function and class docstring dropped, so comment,
+  formatting and docstring edits do not change it;
 - imports are resolved through package ``__init__`` re-export chains to
   the defining module;
 - a unit references another unit if its body mentions the imported name
@@ -52,6 +53,17 @@ def _repo_py_paths() -> list[str]:
     )
 
 
+def _without_docstrings(node: ast.AST) -> ast.AST:
+    """Drop the docstring of every function and class in ``node``
+    (``pass`` stands in for a body that held only a docstring)."""
+    for n in ast.walk(node):
+        if isinstance(
+            n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        ) and ast.get_docstring(n, clean=False) is not None:
+            n.body = n.body[1:] or [ast.Pass()]
+    return node
+
+
 class _ModuleInfo:
     """Units and import table of one module."""
 
@@ -63,7 +75,7 @@ class _ModuleInfo:
         self.imports: dict[str, tuple[str, str | None]] = {}
         for node in tree.body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                self.units[node.name] = ast.unparse(node)
+                self.units[node.name] = ast.unparse(_without_docstrings(node))
             elif isinstance(node, ast.Import):
                 for a in node.names:
                     if a.name.startswith(PKG):

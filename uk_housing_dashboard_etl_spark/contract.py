@@ -157,8 +157,6 @@ def load_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # they were built from, and one HousingPipeline run's outputs plus its
 # ``enriched`` frame, by name.
 _MARTS: dict[tuple[SparkSession, str], tuple[tuple, dict[str, DataFrame]]] = {}
-# the frames of a run that HousingPipeline caches
-_CACHED = ("weekly_by_la", "anomalies", "enriched")
 
 
 def _input_version(sf_dir: str) -> tuple:
@@ -184,7 +182,8 @@ def _mart(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     session, absolute ``sf_dir`` and input version, so successive panels
     read the refresh's marts instead of rebuilding them.
 
-    A new input version unpersists the held run's caches and refreshes
+    The held run's caches are the frames ``HousingPipeline`` cached
+    (``is_cached``). A new input version unpersists them and refreshes
     every Spark cache entry over the tables: Spark matches a cache by plan
     and path, not by file contents, and would otherwise serve the old
     rows. A held run whose caches are gone (after
@@ -194,12 +193,13 @@ def _mart(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     held = _MARTS.get((spark, root))
     if held is not None:
         held_version, marts = held
+        cached = [df for df in marts.values() if df.is_cached]
         if held_version == version and all(
-            marts[n].storageLevel.useMemory for n in _CACHED
+            df.storageLevel.useMemory for df in cached
         ):
             return marts
-        for n in _CACHED:
-            marts[n].unpersist()
+        for df in cached:
+            df.unpersist()
         if held_version != version:
             for table in glob.glob(os.path.join(root, "*.parquet")):
                 spark.catalog.refreshByPath(table)
@@ -1789,6 +1789,10 @@ def q_weekly_approx_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     pX must lie between the exact p(X−5) and p(X+5). Exact percentiles
     are emitted for the oracle's value-hash; the rank-window flags must
     all read TRUE."""
+    from uk_housing_dashboard_etl_spark.functions.guards import (
+        finite_or_null,
+    )
+
     enriched = _mart(spark, sf_dir)["enriched"]
     base = (
         enriched.where(F.col("local_authority").isNotNull())
@@ -1796,14 +1800,7 @@ def q_weekly_approx_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         # same non-finite price boundary as weekly_mart / _BASE_FIN
         # (r13 sweep: this gate recomputes the mart's percentiles, so
         # it must see the identical population)
-        .withColumn(
-            "price",
-            F.expr(
-                "CASE WHEN NOT isnan(price)"
-                " AND abs(price) < CAST('Infinity' AS DOUBLE)"
-                " THEN price END"
-            ),
-        )
+        .withColumn("price", finite_or_null(F.col("price")))
         .select("week", "local_authority", "price")
     )
     g = base.groupBy("week", "local_authority").agg(

@@ -654,8 +654,7 @@ def snapshot_diff(
     # id present in both snapshots would surface as one 'removed' plus
     # one 'added' row instead of changed/unchanged. That mirrors SQL
     # join semantics, and identity-less rows have no meaningful diff —
-    # callers with nullable ids must filter or synthesize ids first,
-    # the same contract as write_tar_shards' NULL-key policy.
+    # callers with nullable ids must filter or synthesize ids first.
     return o.join(n, "doc_id", "full").select(
         "doc_id", status.alias("status"), "old_hash", "new_hash"
     )

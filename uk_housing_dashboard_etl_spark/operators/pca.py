@@ -27,7 +27,7 @@ family already does.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from uk_housing_dashboard_etl_spark.functions.rounding import round4
@@ -135,53 +135,4 @@ def pca_project(
             F.col("__s.component").alias("component"),
             round4(F.col("__s.score")).alias("score"),
         )
-    )
-
-
-def pca_variance_check(
-    embeddings: DataFrame,
-    n_components: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rel_tol: float = 0.05,
-) -> DataFrame:
-    """Self-verifying gate for the PCA family (the pattern of the ANN
-    ``_recall`` gates): fit, project, then ASSERT the spectral
-    contract distributively — for each component the measured variance
-    of its scores must match its eigenvalue within ``rel_tol``, and
-    eigenvalues must be non-increasing. Output one row per component:
-    (component, ok) — the oracle expects every row TRUE.
-
-    This is exactly what PCA guarantees (score variance along v equals
-    vᵀΣv = λ), so a sign error, a mean-centering bug, or a misaligned
-    projection all fail the gate on real data.
-    """
-    comps = pca_fit(embeddings, n_components, vec_col)
-    scores = pca_project(embeddings, comps, id_col, vec_col)
-    measured = scores.groupBy("component").agg(
-        F.var_pop("score").alias("__var")
-    )
-    lam = comps.select(
-        "component",
-        "eigenvalue",
-        # n_components-row frame: the unpartitioned window is bounded
-        F.lead("eigenvalue").over(Window.orderBy("component")).alias(
-            "__next"
-        ),
-    )
-    return (
-        measured.join(F.broadcast(lam), "component")
-        .select(
-            "component",
-            (
-                (
-                    F.abs(F.col("__var") - F.col("eigenvalue"))
-                    <= F.lit(rel_tol) * F.greatest(F.col("eigenvalue"), F.lit(1e-12))
-                )
-                & F.coalesce(
-                    F.col("eigenvalue") >= F.col("__next"), F.lit(True)
-                )
-            ).alias("ok"),
-        )
-        .orderBy("component")
     )

@@ -87,15 +87,6 @@ def _seq_pairdot(A, B, ti: int = 256, tj: int = 2048):
     return acc
 
 
-def cosine_expr(a: str, b: str) -> F.Column:
-    """Cosine similarity of two array<double> columns, sequential-fold
-    double math (deterministic)."""
-    dot = _DOT.format(a=a, b=b)
-    na = _NORM.format(a=a)
-    nb = _NORM.format(a=b)
-    return F.expr(f"({dot}) / (({na}) * ({nb}))")
-
-
 def norm_expr(a: str) -> F.Column:
     """L2 norm of an array<double> column (sequential fold, deterministic)."""
     return F.expr(_NORM.format(a=a))
@@ -104,8 +95,8 @@ def norm_expr(a: str) -> F.Column:
 def cosine_prenorm_expr(a: str, b: str, norm_a: str, norm_b: str) -> F.Column:
     """Cosine with both norms precomputed as scalar columns.
 
-    Evaluates exactly ``dot(a, b) / (norm_a * norm_b)`` — the same
-    expression tree as :func:`cosine_expr` — but the O(dim) norm folds
+    Evaluates exactly ``dot(a, b) / (norm_a * norm_b)`` with the
+    norms taken from :func:`norm_expr` columns, so the O(dim) norm folds
     run once per row on each join side instead of once per PAIR inside
     the join, cutting the interpreted higher-order-function work of a
     Q×N cross join by ~3× (dot only, not dot + two norms)."""

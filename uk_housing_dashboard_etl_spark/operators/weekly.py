@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from uk_housing_dashboard_etl_spark.functions.guards import finite_or_null
 from uk_housing_dashboard_etl_spark.functions.rounding import dmean
 from uk_housing_dashboard_etl_spark.functions.cleaning import (
     coerce_double,
@@ -141,14 +142,7 @@ def weekly_mart(enriched: DataFrame, approx: bool = False) -> DataFrame:
     base = (
         enriched.where(F.col("local_authority").isNotNull())
         .withColumn("week", F.date_trunc("week", F.col("date")))
-        .withColumn(
-            "price",
-            F.expr(
-                "CASE WHEN NOT isnan(price)"
-                " AND abs(price) < CAST('Infinity' AS DOUBLE)"
-                " THEN price END"
-            ),
-        )
+        .withColumn("price", finite_or_null(F.col("price")))
     )
     stats = base.groupBy("week", "local_authority").agg(
         # deterministic mean (exact integer-scaled sum / count):

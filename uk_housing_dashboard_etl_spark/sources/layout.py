@@ -1,39 +1,11 @@
-"""Physical layout utilities: bucketed tables for shuffle-free joins.
+"""Physical layout utilities: the z-order (Morton) key.
 
-At 100 TB the dominant recurring cost of fact-fact joins (lineitem ⋈
-orders, events ⋈ events-history) is the shuffle. Writing both sides
-bucketed by the join key into the warehouse removes it permanently:
-Spark's scan reports the bucketing as the output partitioning, so the
-sort-merge join needs no Exchange on either side — verified by
-``tests/test_layout.py`` on the actual plans.
-
-Bucket count guidance: ~(table size / 256 MB), rounded to a power of
-two shared by all co-bucketed tables; both sides must bucket on the
-SAME keys with the SAME count for exchange elision.
+``zorder_value`` is the key as a Spark column expression and
+``zorder_sql`` the same interleave as DuckDB SQL for oracles; the
+registry's ``zorder_cells`` query and its oracle use them. Partitioned
+writes need no helper here: ``DataFrameWriter.partitionBy`` already
+gives directory pruning on read (``tests/test_layout.py`` checks it).
 """
-
-from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_keys: list[str],
-    num_buckets: int,
-    sort_keys: list[str] | None = None,
-) -> None:
-    """Persist ``df`` as a bucketed (optionally sorted) managed table."""
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_keys)
-    if sort_keys:
-        writer = writer.sortBy(*sort_keys)
-    writer.saveAsTable(table_name)
-
-
-def read_table_bucketed(spark: SparkSession, table_name: str) -> DataFrame:
-    """Read a bucketed table (bucketing metadata rides along)."""
-    return spark.table(table_name)
 
 
 def zorder_value(x, y, bits: int = 16):

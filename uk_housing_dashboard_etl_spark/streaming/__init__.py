@@ -3,9 +3,6 @@ from uk_housing_dashboard_etl_spark.streaming.weekly_stream import (
     run_stream_once,
     run_stream_to_parquet,
 )
-from uk_housing_dashboard_etl_spark.streaming.session_stream import (
-    session_stream,
-)
 from uk_housing_dashboard_etl_spark.streaming.funnel_stream import (
     funnel_stream,
 )
@@ -17,7 +14,6 @@ __all__ = [
     "weekly_stream",
     "run_stream_once",
     "run_stream_to_parquet",
-    "session_stream",
     "funnel_stream",
     "attribution_stream",
 ]
